@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 
 object Bench {
@@ -9,17 +9,11 @@ object Bench {
     * sees deterministic row order). The sort is harness overhead, not
     * operator work — at scale nobody totally orders a 60 M-row result —
     * so the bench also reports each query with the top-level Sort
-    * stripped. Reflection because classic.Dataset.ofRows is
-    * private[sql] at the Scala level (public in bytecode).
+    * stripped.
     */
   private def stripTopSort(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
-      case s: Sort if s.global =>
-        val cls = Class.forName("org.apache.spark.sql.classic.Dataset$")
-        val mod = cls.getField("MODULE$").get(null)
-        val ofRows = cls.getMethods
-          .find(m => m.getName == "ofRows" && m.getParameterCount == 2).get
-        ofRows.invoke(mod, df.sparkSession, s.child).asInstanceOf[DataFrame]
+      case s: Sort if s.global => GraftBridge.ofRows(df.sparkSession, s.child)
       case _ => df
     }
 
@@ -55,20 +49,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: session/scheduler/codegen-infra JIT, one tiny
-    // parquet footer read — so the first measured query isn't charged
-    // ~4s of one-time JVM cost. Table data itself stays uncached.
-    spark.range(1000).selectExpr("sum(id)").collect() // bounded: 1-row warmup aggregate
-    Tables.region(spark, sfDir).count()
+    val spark = Session.local()
+    Session.warmUp(spark, sfDir)
 
     // dev knob: SPARK_GRAFT_QUERIES=a,b,c restricts the run for quick
     // single-query iteration; unset = the full driver surface

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1: measure first).
   * Not part of the driver contract — a dev tool that answers, for one
@@ -27,20 +26,11 @@ object PerfProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val doExplain = args.headOption.contains("explain")
     val names = (if (doExplain) args.drop(1) else args).toSeq
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect() // warmup (bounded: 1 row)
-    Tables.region(spark, sfDir).count()
+    val spark = Session.local()
+    Session.warmUp(spark, sfDir)
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     spark.sparkContext.addSparkListener(new SparkListener {

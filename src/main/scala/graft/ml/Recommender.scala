@@ -166,6 +166,24 @@ object Recommender {
   case class MllibFactors(rank: Int, userFactors: DataFrame,
       itemFactors: DataFrame)
 
+  /** Train and `save` a small mllib MatrixFactorizationModel at `path`
+    * (replacing whatever is there): rank 4, seed 42, over a fixed
+    * rating set of 40 users × 40 products (two of every three pairs,
+    * ratings 1–5), so its on-disk layout is the one the reference's
+    * spark_music.py:116 `model.save` writes.
+    */
+  def saveMllibModel(spark: SparkSession, path: String): Unit = {
+    import org.apache.spark.mllib.recommendation.{ALS => MllibALS, Rating}
+    val sc = spark.sparkContext
+    val ratings = sc.parallelize(
+      for (u <- 0 until 40; p <- 0 until 40 if (u + 2 * p) % 3 != 0)
+        yield Rating(u, p, ((u * 7 + p * 3) % 5 + 1).toDouble), 4)
+    val model = MllibALS.train(ratings, 4, 5, 0.1, 2, 42L)
+    val out = new org.apache.hadoop.fs.Path(path)
+    out.getFileSystem(sc.hadoopConfiguration).delete(out, true)
+    model.save(sc, path)
+  }
+
   /** Load the reference's on-disk layout directly — no mllib code
     * path, just the parquet factor tables + the metadata JSON — so a
     * user can consume their existing `music_lens_als/` artifact from

@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.Fx.FxMaterialize
 import graft.functions.PseudoJson
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, TimeMode, Trigger}
 
 /** Structured Streaming layer (SURVEY.md §2.10).
   *
@@ -22,9 +24,11 @@ object Streams {
   /** Decoded rating event from the wire format (SURVEY §1). */
   case class RateEvent(userid: Int, tag: String, songid: Int, rating: Int)
 
-  /** Keyed event-time record (stream-stream join feed). */
+  /** Keyed event-time record (stream-stream join feed): a click when
+    * `click`, else a purchase.
+    */
   case class KeyedTimedEvent(eventId: Long, userId: Long,
-      ts: java.sql.Timestamp)
+      ts: java.sql.Timestamp, click: Boolean)
   /** (doc_id, text) ingest record (incremental-minhash feed). */
   case class DocEvent(doc_id: Long, text: String)
   case class VecEvent(vec_id: Long, embedding: Seq[Float])
@@ -148,6 +152,24 @@ object Streams {
       .groupBy(session_window(col(tsCol), gap), col(keyCol))
       .count()
 
+  /** The capped event feed with ms-precision event time, in (ts, user)
+    * order — the windowed and session-window queries' feed. events.ts
+    * is nanos-since-epoch (TESTDATA note); the feed cap is the same
+    * DETERMINISTIC event_id predicate the oracles mirror (an ORDER
+    * BY/LIMIT cap could tie-break differently across engines). Order
+    * within the batch is fixed for reproducibility but can't affect the
+    * finalized results.
+    */
+  private def timedFeed(spark: SparkSession, dir: String): Array[TimedEvent] = {
+    import spark.implicits._
+    graft.Tables.events(spark, dir)
+      .filter($"event_id" < HarnessFeedCap)
+      .select($"user_id", $"event_type", $"ts")
+      .orderBy($"ts", $"user_id").collect()
+      .map(r => TimedEvent(r.getLong(0), r.getString(1),
+        new java.sql.Timestamp(r.getLong(2) / 1000000L)))
+  }
+
   /** Session gap for the driver query (ms), shared with the oracle. */
   val SessionGapMs: Long = 12L * 3600 * 1000
 
@@ -168,37 +190,23 @@ object Streams {
     * encodings.
     */
   def sessionWindowQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_type", $"ts")
-      .orderBy($"ts", $"user_id").collect()
-      .map(r => TimedEvent(r.getLong(0), r.getString(1),
-        new java.sql.Timestamp(r.getLong(2) / 1000000L)))
+    val evs = timedFeed(spark, dir)
     if (evs.isEmpty)
       return Seq.empty[(Long, Long, Long, Long)]
         .toDF("user_id", "s_start_ms", "s_end_ms", "n_events")
     val maxMs = evs.map(_.ts.getTime).max
-    val in = MemoryStream[TimedEvent](spark)
-    val name = runStreamToTable(spark, "session_windows", Some(4)) { (n, ck) =>
+    // ONE sentinel batch advances the watermark past every data
+    // session's end at its batch's END; the engine's no-data micro-batch
+    // (shouldRunAnotherBatch on watermark advance, awaited by
+    // processAllAvailable) is the trigger that emits the finalized
+    // sessions. user -1 keeps the synthetic session out of the data keys.
+    val sentinel = TimedEvent(-1L, "sentinel",
+      new java.sql.Timestamp(maxMs + 2 * SessionGapMs))
+    val name = replay(spark, "session_windows",
+        slices(evs, 1) :+ Seq(sentinel), OutputMode.Append) { in =>
       sessionWindowCounts(in.toDF(), "ts", "user_id",
-          gap = "12 hours", lateness = "30 seconds")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      in.addData(evs.toIndexedSeq)
-      q.processAllAvailable()
-      // ONE sentinel advances the watermark past every data session's
-      // end at its batch's END; the engine's no-data micro-batch
-      // (shouldRunAnotherBatch on watermark advance, awaited by
-      // processAllAvailable) is the trigger that emits the finalized
-      // sessions. user -1 keeps the synthetic session out of the data
-      // keys.
-      in.addData(TimedEvent(-1L, "sentinel",
-        new java.sql.Timestamp(maxMs + 2 * SessionGapMs)))
-      q.processAllAvailable()
+        gap = "12 hours", lateness = "30 seconds")
     }
     // ms-precision feed → unix_millis bounds are exact; session end is
     // last-event ts + gap by definition, mirrored verbatim in SQL.
@@ -296,40 +304,97 @@ object Streams {
       .trigger(trigger)
       .foreachBatch((batch: DataFrame, id: Long) => emit(wordCounts(batch), id))
 
-  /** Shared MemoryStream harness lifecycle for the driver-contract
-    * streaming queries: unique memory-sink name, temp checkpoint,
-    * optional stream-local state-partition override (saved and
-    * restored around `start`), and GUARANTEED query stop + checkpoint
-    * reclamation even when the feed fails mid-way — a failed
-    * `processAllAvailable` must not leave an orphaned streaming query
-    * holding state-store resources, nor litter tmp with checkpoints.
-    * Returns the memory-sink table name.
+  /** Split an in-memory feed into `n` near-equal micro-batches in feed
+    * order (the last may be shorter; an empty feed is no batch).
     */
-  private[streaming] def runStreamToTable(spark: SparkSession,
-      prefix: String, statePartitions: Option[Int])(
-      start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): String = {
+  private[streaming] def slices[T](rows: Array[T], n: Int): Seq[Seq[T]] =
+    rows.grouped(math.max(1, math.ceil(rows.length.toDouble / n).toInt))
+      .map(_.toSeq).toSeq
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The replay policy every streaming contract query shares —
+    * Structured Streaming's split of a query into a static plan and a
+    * trigger/checkpoint policy, with the policy kept here once. `plan`
+    * maps the MemoryStream input to the streaming relation; each `feed`
+    * entry is added as one micro-batch and drained before the next (an
+    * empty feed means the plan reads its own source, drained once).
+    * The sink is a memory table, whose name is returned; `sink` is a
+    * writer step on top of it — foreachBatch or a connector format
+    * replaces the memory sink, a trigger adds to it.
+    *
+    *  - Unique sink name and a single-use scratch checkpoint, deleted
+    *    on exit (a memory sink cannot recover from it anyway). Scratch
+    *    prefers tmpfs: the micro-batch commit protocol writes offset,
+    *    commit and state-delta files per trigger, and on a disk-backed
+    *    tmpdir that churn dominates short streams. Durable checkpoints
+    *    for recoverable sinks belong on real storage, not here.
+    *  - One conf scope around `start()`: `statePartitions` shuffle
+    *    partitions (None keeps the session's; 4 is plenty for the
+    *    HarnessFeedCap-bounded feeds and bounds the per-batch checkpoint
+    *    fan-out; a deployment sizes it to its key cardinality), and the
+    *    RocksDB provider when the plan holds a transformWithState, which
+    *    requires it. The stream clones the session conf at start, so
+    *    restoring right after start leaves the session as it was.
+    *  - A processing-time transformWithState never quiesces: timers and
+    *    TTL advance with the clock, so every trigger runs another no-data
+    *    batch and processAllAvailable would block forever. Its batches
+    *    are awaited by the committed source offset instead.
+    *  - GUARANTEED stop and checkpoint deletion even when the feed fails
+    *    mid-way: a failed batch must not leave an orphaned query holding
+    *    state-store resources, nor litter scratch with checkpoints.
+    */
+  private[graft] def replay[T: Encoder](spark: SparkSession, prefix: String,
+      feed: Seq[Seq[T]], mode: OutputMode,
+      statePartitions: Option[Int] = Some(4),
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row] = identity)(
+      plan: Dataset[T] => DataFrame): String = {
+    import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+    val in = MemoryStream[T](spark)
+    val df = plan(in.toDS())
+    val timeMode = df.queryExecution.logical.collectFirst {
+      case t: TransformWithState => t.timeMode
+    }
     val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    // single-use scratch checkpoint (deleted in the finally below, and
-    // a memory sink cannot recover from it anyway): prefer tmpfs when
-    // the host has one — the micro-batch commit protocol writes
-    // offsets/commits/state-delta files per trigger, and on a disk-
-    // backed tmpdir that file churn dominates short harness streams.
-    // Durable checkpoints for recoverable sinks belong on real storage
-    // and do NOT go through this helper.
     val ckpt = graft.sources.Sources.scratchTempDir("graft_ckpt")
     try {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      statePartitions.foreach(p =>
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString))
+      val scope = Seq(
+        "spark.sql.shuffle.partitions" -> statePartitions.map(_.toString),
+        "spark.sql.streaming.stateStore.providerClass" ->
+          timeMode.map(_ => RocksDbProvider))
+        .collect { case (k, Some(v)) =>
+          (k, v, spark.conf.getAll.get(k))
+        }
+      scope.foreach { case (k, v, _) => spark.conf.set(k, v) }
       val q =
-        try start(name, ckpt.toString)
-        finally statePartitions.foreach(_ =>
-          spark.conf.set("spark.sql.shuffle.partitions", prev))
+        try sink(df.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode(mode)).start()
+        finally scope.foreach {
+          case (k, _, Some(prev)) => spark.conf.set(k, prev)
+          case (k, _, None) => spark.conf.unset(k)
+        }
+      def drain(offset: String): Unit =
+        if (!timeMode.contains(TimeMode.ProcessingTime())) q.processAllAvailable()
+        else {
+          val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+          while (!Option(q.lastProgress)
+              .exists(_.sources.exists(_.endOffset == offset))) {
+            q.exception.foreach(e => throw e)
+            if (System.nanoTime > deadline)
+              throw new IllegalStateException(s"$name: offset $offset never committed")
+            Thread.sleep(50)
+          }
+        }
       // stop() can itself throw (e.g. a stop timeout on a wedged
       // query) — keep the feed's root-cause exception primary and
       // attach the stop failure as suppressed
-      try { feed(q); q.stop() } catch {
+      try {
+        if (feed.isEmpty) q.processAllAvailable()
+        feed.foreach(b => drain(in.addData(b).json))
+        q.stop()
+      } catch {
         case t: Throwable =>
           try q.stop() catch {
             case s: Throwable if s ne t => t.addSuppressed(s)
@@ -338,13 +403,35 @@ object Streams {
       }
       name
     } finally {
-      // single-use checkpoint (memory sink can't recover anyway)
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(ckpt)
       try walk.iterator().asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
       finally walk.close()
     }
+  }
+
+  /** Final state per key of an Update-mode emission log whose `seq`
+    * is monotone per key: the max_by(seq) row's `cols`, next to `keys`.
+    */
+  private def finalState(log: DataFrame, keys: String*)(
+      cols: String*): DataFrame =
+    log.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), col("seq")).as("f"))
+      .select(keys.map(col) ++ cols.map(c => col(s"f.$c")): _*)
+
+  /** The capped event feed in integer cents, event_id order (the fold
+    * order of the per-user stateful queries); `from` cuts off a prefix.
+    */
+  private def centFeed(spark: SparkSession, dir: String,
+      from: Long = 0L): Array[CentEvent] = {
+    import spark.implicits._
+    graft.Tables.events(spark, dir)
+      .filter($"event_id" >= from && $"event_id" < HarnessFeedCap)
+      .select($"user_id", $"event_id",
+        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
+      .orderBy($"event_id")
+      .as[CentEvent].collect()
   }
 
   /** Driver-contract query with a FULL DuckDB oracle: feed the
@@ -362,19 +449,12 @@ object Streams {
     * operator is hash-checked end-to-end.
     */
   def markerFlushQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val evs = graft.operators.TextOps.pseudoJsonRoundtrip(spark, dir)
       .filter($"event_id" < HarnessFeedCap).collect()
       .map(r => RateEvent(r.getInt(1), r.getString(2), r.getInt(3), r.getInt(4)))
-    val in = MemoryStream[RateEvent](spark)
-    in.addData(evs.toIndexedSeq)
-    val name = runStreamToTable(spark, "marker_flush", Some(4)) { (n, ck) =>
-      MarkerBuffer.markerFlush(in.toDS())
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q => q.processAllAvailable() }
+    val name = replay(spark, "marker_flush", slices(evs, 1),
+      OutputMode.Append)(in => MarkerBuffer.markerFlush(in).toDF())
     spark.table(name).orderBy("userid", "flushSeq", "songid", "tag", "rating")
   }
 
@@ -401,44 +481,22 @@ object Streams {
     * never hashes engine-specific timestamp encodings.
     */
   def windowedCountsQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    // events.ts is nanos-since-epoch (TESTDATA note). The feed cap is
-    // the same DETERMINISTIC event_id predicate streaming_asof_enrich
-    // mirrors in its oracle (an ORDER BY/LIMIT cap could tie-break
-    // differently across engines); order within the batch is fixed for
-    // reproducibility but can't affect the finalized counts.
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_type", $"ts")
-      .orderBy($"ts", $"user_id").collect()
-      .map(r => TimedEvent(r.getLong(0), r.getString(1),
-        new java.sql.Timestamp(r.getLong(2) / 1000000L)))
+    val evs = timedFeed(spark, dir)
     if (evs.isEmpty)
       return Seq.empty[(Long, Long, String, Long)]
         .toDF("w_start_us", "w_end_us", "event_type", "n_events")
     val maxMs = evs.map(_.ts.getTime).max
-    val in = MemoryStream[TimedEvent](spark)
-    // state partitions = 4: plenty for the HarnessFeedCap-bounded
-    // (event_id < 10000) harness feed, 8× less
-    // per-batch checkpoint fan-out than the session's batch setting (a
-    // production deployment sizes this to its key cardinality)
-    val name = runStreamToTable(spark, "windowed_counts", Some(4)) { (n, ck) =>
+    // ONE sentinel batch advances the watermark past the data at its
+    // batch's END; the engine's no-data micro-batch (fired on any
+    // watermark advance, awaited by processAllAvailable) is the
+    // trigger in which the finalized data windows are emitted
+    val sentinel = TimedEvent(0, "sentinel",
+      new java.sql.Timestamp(maxMs + 2 * 3600 * 1000L))
+    val name = replay(spark, "windowed_counts",
+        slices(evs, 1) :+ Seq(sentinel), OutputMode.Append) { in =>
       windowedEventCounts(in.toDF(), "ts", "event_type",
-          windowLen = "1 hour", lateness = "30 seconds")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      in.addData(evs.toIndexedSeq)
-      q.processAllAvailable()
-      // ONE sentinel advances the watermark past the data at its
-      // batch's END; the engine's no-data micro-batch (fired on any
-      // watermark advance, awaited by processAllAvailable) is the
-      // trigger in which the finalized data windows are emitted
-      in.addData(TimedEvent(0, "sentinel",
-        new java.sql.Timestamp(maxMs + 2 * 3600 * 1000L)))
-      q.processAllAvailable()
+        windowLen = "1 hour", lateness = "30 seconds")
     }
     // sentinel 1's own window finalizes once sentinel 2 passes it —
     // keep the synthetic rows out of the reported counts. Hour windows
@@ -510,12 +568,8 @@ object Streams {
 
   def dsv2StreamQuery(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val name = runStreamToTable(spark, "dsv2_stream", Some(4)) { (n, ck) =>
-      dsv2WindowedRelation(spark)
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q => q.processAllAvailable() }
+    val name = replay[Long](spark, "dsv2_stream", Nil, OutputMode.Append)(
+      _ => dsv2WindowedRelation(spark))
     spark.table(name).orderBy($"w_start_us")
   }
 
@@ -531,23 +585,14 @@ object Streams {
     */
   def dsv2PipeQuery(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "dsv2_pipe")
-    // fresh table + checkpoint per invocation (the bench re-runs
-    // queries in one JVM; appending into a shared table would double)
-    val dest = new java.io.File(base,
+    // fresh table per invocation (the bench re-runs queries in one JVM;
+    // appending into a shared table would double)
+    val dest = new java.io.File(
+      graft.sources.Sources.scratchDir(spark, "dsv2_pipe"),
       java.util.UUID.randomUUID().toString).toString
-    val ck = new java.io.File(base,
-      "ck_" + java.util.UUID.randomUUID().toString).toString
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try dsv2WindowedRelation(spark)
-        .writeStream.format("graft.sources.ManifestV2")
-        .option("path", dest)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try q.processAllAvailable() finally q.stop()
+    replay[Long](spark, "dsv2_pipe", Nil, OutputMode.Append,
+      sink = _.format("graft.sources.ManifestV2").option("path", dest))(
+      _ => dsv2WindowedRelation(spark))
     spark.read.format("graft.sources.ManifestV2").option("path", dest).load()
       .orderBy($"w_start_us")
   }
@@ -574,15 +619,12 @@ object Streams {
       src.filter($"okey" % 3 === t)
         .write.format("graft.sources.ManifestV2")
         .option("path", dest).mode("append").save()
-    val name = runStreamToTable(spark, "table_feed", Some(4)) { (n, ck) =>
+    val name = replay[Long](spark, "table_feed", Nil, OutputMode.Complete) { _ =>
       spark.readStream.format("graft.sources.ManifestV2")
         .option("path", dest).load()
         .groupBy($"m")
         .agg(count(lit(1)).as("n"), sum($"okey").as("key_sum_raw"))
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Complete).start()
-    } { q => q.processAllAvailable() }
+    }
     spark.table(name)
       .select($"m", $"n",
         expr("CAST(key_sum_raw AS BIGINT)").as("key_sum"))
@@ -795,53 +837,49 @@ object Streams {
     * values in both engines.
     */
   def streamStreamJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val (clicks, purchases) = clickPurchaseFeeds(spark, dir)
-    if (clicks.isEmpty || purchases.isEmpty)
+    val fed = clickPurchaseFeed(spark, dir)
+    if (!fed.exists(_.click) || fed.forall(_.click))
       return Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("click_id", "purchase_id", "user_id", "c_ts_ms", "p_ts_ms")
-    val inC = MemoryStream[KeyedTimedEvent](spark)
-    val inP = MemoryStream[KeyedTimedEvent](spark)
-    val joined = streamStreamJoin(
-      inC.toDF().select($"eventId".as("c_id"), $"userId", $"ts".as("c_ts")),
-      inP.toDF().select($"eventId".as("p_id"), $"userId", $"ts".as("p_ts")),
-      "userId", "c_ts", "p_ts", window = "30 minutes")
-    val name = runStreamToTable(spark, "ss_join", Some(4)) { (n, ck) =>
-      joined
-        .select(col("l.c_id").as("click_id"), col("r.p_id").as("purchase_id"),
-          col("l.userId").as("user_id"),
-          unix_millis(col("l.c_ts")).as("c_ts_ms"),
-          unix_millis(col("r.p_ts")).as("p_ts_ms"))
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      inC.addData(clicks.toIndexedSeq)
-      inP.addData(purchases.toIndexedSeq)
-      q.processAllAvailable()
-    }
+    val name = replay(spark, "ss_join", slices(fed, 1), OutputMode.Append)(
+      attribution(_, "inner"))
     spark.table(name).orderBy($"click_id", $"purchase_id")
   }
 
   /** Shared harness feed for the stream-stream join queries: ONE scan
-    * + collect over the capped events slice yields both typed feeds
-    * (the former per-type collects each re-scanned the events table).
-    * Global event_id order is preserved, so each per-type slice is in
-    * exactly the order the per-type collects produced.
+    * + collect over the capped events slice yields both sides, tagged,
+    * in global event_id order, fed as ONE stream that [[attribution]]
+    * splits — so both sides of a slice always land in the same batch.
     */
-  private def clickPurchaseFeeds(spark: SparkSession,
-      dir: String): (Array[KeyedTimedEvent], Array[KeyedTimedEvent]) = {
+  private def clickPurchaseFeed(spark: SparkSession,
+      dir: String): Array[KeyedTimedEvent] = {
     import spark.implicits._
-    val fed = graft.Tables.events(spark, dir)
+    graft.Tables.events(spark, dir)
       .filter($"event_id" < HarnessFeedCap &&
         $"event_type".isin("click", "purchase"))
       .select($"event_id", $"user_id", $"ts", $"event_type")
       .orderBy($"event_id").collect() // bounded: HarnessFeedCap
-      .map(r => (r.getString(3), KeyedTimedEvent(r.getLong(0), r.getLong(1),
-        new java.sql.Timestamp(r.getLong(2) / 1000000L))))
-    (fed.collect { case ("click", e) => e },
-      fed.collect { case ("purchase", e) => e })
+      .map(r => KeyedTimedEvent(r.getLong(0), r.getLong(1),
+        new java.sql.Timestamp(r.getLong(2) / 1000000L),
+        r.getString(3) == "click"))
+  }
+
+  /** Clicks joined to the purchases by the same user in the 30 minutes
+    * after them, both sides split off the one tagged feed stream;
+    * timestamps as epoch-ms BIGINTs.
+    */
+  private def attribution(in: Dataset[KeyedTimedEvent],
+      joinType: String): DataFrame = {
+    def side(click: Boolean, id: String, ts: String) =
+      in.toDF().filter(col("click") === click)
+        .select(col("eventId").as(id), col("userId"), col("ts").as(ts))
+    streamStreamJoin(side(true, "c_id", "c_ts"), side(false, "p_id", "p_ts"),
+      "userId", "c_ts", "p_ts", window = "30 minutes", joinType = joinType)
+      .select(col("l.c_id").as("click_id"), col("r.p_id").as("purchase_id"),
+        col("l.userId").as("user_id"),
+        unix_millis(col("l.c_ts")).as("c_ts_ms"),
+        unix_millis(col("r.p_ts")).as("p_ts_ms"))
   }
 
   /** LEFT OUTER stream-stream join — the attribution variant that also
@@ -850,51 +888,28 @@ object Streams {
     * silently drops every click that never converted. Outer emission is
     * watermark-gated by contract — a null row may only appear once no
     * future purchase could still match, i.e. when the GLOBAL watermark
-    * (the min across both sources) passes click_ts + window + lateness.
+    * (the min across both sides) passes click_ts + window + lateness.
     * The harness advances it with ONE far-future sentinel event on
-    * EACH stream: the watermark moves at that batch's END, and the
-    * engine's no-data micro-batch (shouldRunAnotherBatch fires on any
-    * watermark advance, and processAllAvailable waits for the cascade)
-    * is the trigger in which the expired clicks emit — no second
+    * EACH side, in one batch: the watermark moves at that batch's END,
+    * and the engine's no-data micro-batch (shouldRunAnotherBatch fires
+    * on any watermark advance, and processAllAvailable waits for the
+    * cascade) is the trigger in which the expired clicks emit — no second
     * sentinel round needed. Sentinels use negative ids/keys on
     * disjoint key spaces (so they match nothing) and are filtered from
     * the result. The oracle is the plain batch LEFT JOIN over the
     * capped feed.
     */
   def streamStreamLeftJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val (clicks, purchases) = clickPurchaseFeeds(spark, dir)
-    if (clicks.isEmpty)
+    val fed = clickPurchaseFeed(spark, dir)
+    if (!fed.exists(_.click))
       return Seq.empty[(Long, Option[Long], Long, Long, Option[Long])]
         .toDF("click_id", "purchase_id", "user_id", "c_ts_ms", "p_ts_ms")
-    val inC = MemoryStream[KeyedTimedEvent](spark)
-    val inP = MemoryStream[KeyedTimedEvent](spark)
-    val joined = streamStreamJoin(
-      inC.toDF().select($"eventId".as("c_id"), $"userId", $"ts".as("c_ts")),
-      inP.toDF().select($"eventId".as("p_id"), $"userId", $"ts".as("p_ts")),
-      "userId", "c_ts", "p_ts", window = "30 minutes",
-      joinType = "left_outer")
-    val maxMs = (clicks ++ purchases).map(_.ts.getTime).max
-    def sentinel(id: Long, key: Long, plusDays: Long) =
-      KeyedTimedEvent(id, key,
-        new java.sql.Timestamp(maxMs + plusDays * 86400000L))
-    val name = runStreamToTable(spark, "ss_ljoin", Some(4)) { (n, ck) =>
-      joined
-        .select(col("l.c_id").as("click_id"), col("r.p_id").as("purchase_id"),
-          col("l.userId").as("user_id"),
-          unix_millis(col("l.c_ts")).as("c_ts_ms"),
-          unix_millis(col("r.p_ts")).as("p_ts_ms"))
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      inC.addData(clicks.toIndexedSeq)
-      inP.addData(purchases.toIndexedSeq)
-      q.processAllAvailable()
-      inC.addData(sentinel(-1L, -1L, 100)); inP.addData(sentinel(-2L, -2L, 100))
-      q.processAllAvailable()
-    }
+    val far = new java.sql.Timestamp(fed.map(_.ts.getTime).max + 100 * 86400000L)
+    val sentinels = Seq(KeyedTimedEvent(-1L, -1L, far, click = true),
+      KeyedTimedEvent(-2L, -2L, far, click = false))
+    val name = replay(spark, "ss_ljoin", slices(fed, 1) :+ sentinels,
+      OutputMode.Append)(attribution(_, "left_outer"))
     spark.table(name).filter($"click_id" >= 0)
       .orderBy($"click_id", $"purchase_id")
   }
@@ -918,7 +933,6 @@ object Streams {
     * is merge_apply's own reconstruction SQL.
     */
   def mergeApplyStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     import graft.sources.Maintenance
     val v1 = graft.Tables.widened(spark,
@@ -950,24 +964,14 @@ object Streams {
         fed.collect { case (id, _) if id % 17 == 3 =>
           CdcOp(id, "", "delete") })
         .sortBy(_.doc_id)
-    val in = MemoryStream[CdcOp](spark)
-    runStreamToTable(spark, "cdc_merge", Some(4)) { (n, ck) =>
-      in.toDS().writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[CdcOp],
-            _: Long) =>
-          val b = batch.cache()
-          Maintenance.mergeApply(spark, StreamMergePath,
-            b.filter($"op" === "upsert").select($"doc_id", $"text"),
-            b.filter($"op" === "delete").select($"doc_id"))
-          b.unpersist(); ()
-        }
-        .queryName(n).start()
-    } { q =>
-      val (a, b) = feed.splitAt(feed.length / 2)
-      in.addData(a.toIndexedSeq); q.processAllAvailable()
-      in.addData(b.toIndexedSeq); q.processAllAvailable()
-    }
+    replay(spark, "cdc_merge", slices(feed, 2), OutputMode.Append,
+      sink = _.foreachBatch { (batch: DataFrame, _: Long) =>
+        val b = batch.cache()
+        Maintenance.mergeApply(spark, StreamMergePath,
+          b.filter($"op" === "upsert").select($"doc_id", $"text"),
+          b.filter($"op" === "delete").select($"doc_id"))
+        b.unpersist(); ()
+      })(_.toDF())
     spark.read.parquet(StreamMergePath)
       .select($"doc_id", $"part", $"text")
       .orderBy($"doc_id")
@@ -1000,18 +1004,14 @@ object Streams {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("cents",
         org.apache.spark.sql.types.LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(landing)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), sum($"cents").as("sum_cents"))
-    val name = runStreamToTable(spark, "file_source", Some(4)) { (n, ck) =>
-      stream.writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Complete)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    } { q => q.awaitTermination() }
+    val name = replay[Long](spark, "file_source", Nil, OutputMode.Complete,
+        sink = _.trigger(Trigger.AvailableNow())) { _ =>
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(landing)
+        .groupBy($"event_type")
+        .agg(count(lit(1)).as("n"), sum($"cents").as("sum_cents"))
+    }
     spark.table(name).orderBy($"event_type")
   }
 
@@ -1028,7 +1028,6 @@ object Streams {
     */
   def topkCompleteQuery(spark: SparkSession, dir: String, k: Int = 10,
       docCap: Long = 200L): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val docs = graft.Tables.documents(spark, dir)
       .filter($"doc_id" < docCap).select($"doc_id", $"text")
@@ -1036,18 +1035,10 @@ object Streams {
       .map(r => DocEvent(r.getLong(0), r.getString(1)))
     if (docs.isEmpty)
       return Seq.empty[(String, Long)].toDF("word", "cnt")
-    val in = MemoryStream[DocEvent](spark)
-    val counts = in.toDF()
-      .select(explode(split($"text", " ")).as("word"))
-      .groupBy($"word").agg(count(lit(1)).as("cnt"))
-    val name = runStreamToTable(spark, "topk_complete", Some(4)) { (n, ck) =>
-      counts.writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Complete).start()
-    } { q =>
-      val (a, b) = docs.splitAt(docs.length / 2)
-      in.addData(a.toIndexedSeq); q.processAllAvailable()
-      in.addData(b.toIndexedSeq); q.processAllAvailable()
+    val name = replay(spark, "topk_complete", slices(docs, 2),
+        OutputMode.Complete) { in =>
+      in.select(explode(split($"text", " ")).as("word"))
+        .groupBy($"word").agg(count(lit(1)).as("cnt"))
     }
     spark.table(name).orderBy($"cnt".desc, $"word").limit(k)
   }
@@ -1077,7 +1068,6 @@ object Streams {
     */
   def incrementalMinhashQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val docs = graft.Tables.widened(spark, graft.Tables.documents(spark, dir))
       .select($"doc_id", $"text")
@@ -1090,35 +1080,23 @@ object Streams {
     val empty = Seq.empty[(Long, Long, Double)]
       .toDF("doc_a", "doc_b", "jaccard")
     if (streamed.isEmpty) return empty
-    val slices = {
-      val per = math.max(1, math.ceil(streamed.length.toDouble / numBatches).toInt)
-      streamed.grouped(per).toSeq
-    }
-    val in = MemoryStream[DocEvent](spark)
     // driver-side accumulation of per-batch PAIR LISTS (candidate-
     // bounded and tiny), not documents — the corpus itself stays
     // distributed throughout
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var idx = graft.operators.Dedup.buildIndex(standing)
-    runStreamToTable(spark, "inc_minhash", Some(4)) { (n, ck) =>
-      in.toDF().writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ck)
-        .queryName(n)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) { // ST4 empty-batch skip
-            // the batch is read exactly once (by the shingle pass that
-            // probeAndExtend checkpoints), so no extra materialization
-            val (pairs, next) = graft.operators.Dedup
-              .probeAndExtend(idx, batch)
-            out += pairs.materialized
-            idx = next
-            ()
-          }
-        }.start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-    }
+    replay(spark, "inc_minhash", slices(streamed, numBatches), OutputMode.Append,
+      sink = _.foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) { // ST4 empty-batch skip
+          // the batch is read exactly once (by the shingle pass that
+          // probeAndExtend checkpoints), so no extra materialization
+          val (pairs, next) = graft.operators.Dedup
+            .probeAndExtend(idx, batch)
+          out += pairs.materialized
+          idx = next
+          ()
+        }
+      })(_.toDF())
     out.foldLeft(empty)(_ unionByName _).orderBy($"doc_a", $"doc_b")
   }
 
@@ -1135,7 +1113,6 @@ object Streams {
     */
   def incrementalIvfQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val nNew = 8
     val emb = graft.Tables.embeddings(spark, dir)
@@ -1148,28 +1125,16 @@ object Streams {
       .buildIvfIndex(emb.filter($"vec_id" >= nNew))
     if (built.cents.isEmpty) return empty
     val idx = built.copy(assigned = built.assigned.materialized)
-    val slices = {
-      val per = math.max(1, math.ceil(streamed.length.toDouble / numBatches).toInt)
-      streamed.grouped(per).toSeq
-    }
-    val in = MemoryStream[VecEvent](spark)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    runStreamToTable(spark, "inc_ivf", Some(4)) { (n, ck) =>
-      in.toDF().writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ck)
-        .queryName(n)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) { // ST4 empty-batch skip
-            out += graft.operators.Similarity
-              .probeIvfIndex(idx, batch.materialized)
-              .materialized
-            ()
-          }
-        }.start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-    }
+    replay(spark, "inc_ivf", slices(streamed, numBatches), OutputMode.Append,
+      sink = _.foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) { // ST4 empty-batch skip
+          out += graft.operators.Similarity
+            .probeIvfIndex(idx, batch.materialized)
+            .materialized
+          ()
+        }
+      })(_.toDF())
     out.foldLeft(empty)(_ unionByName _).orderBy($"query_id", $"rank")
   }
 
@@ -1196,8 +1161,6 @@ object Streams {
     */
   def hllStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     import graft.operators.Sketches
     val evs = graft.Tables.events(spark, dir)
@@ -1208,14 +1171,9 @@ object Streams {
     val emptyOut = Seq.empty[(String, Long, Double)]
       .toDF("key", "n_exact", "hll_estimate")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[KeyedId](spark)
-    val name = runStreamToTable(spark, "hll_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.k)
+    val name = replay(spark, "hll_stream", slices(evs, numBatches),
+        OutputMode.Update) { in =>
+      in.groupByKey(_.k)
         .mapGroupsWithState[(Vector[Int], Long), HllProgress](
           GroupStateTimeout.NoTimeout) {
           (key: String, it: Iterator[KeyedId],
@@ -1233,15 +1191,9 @@ object Streams {
             HllProgress(key, seq0 + n, st)
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
     // final state per key -> (k, reg, r) relation -> shared finisher
-    val finalRegs = spark.table(name)
-      .groupBy($"k").agg(max_by($"regs", $"seq").as("regs"))
+    val finalRegs = finalState(spark.table(name), "k")("regs")
       .select($"k", posexplode($"regs"))
       .select($"k", $"pos".cast("long").as("reg"), $"col".as("r"))
       .filter($"r" > 0)
@@ -1274,8 +1226,6 @@ object Streams {
     */
   def cmsStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     import graft.operators.Sketches
     val vals = graft.operators.Relational.ratings(spark, dir)
@@ -1286,15 +1236,11 @@ object Streams {
     val emptyOut = Seq.empty[(Long, Long, Long)]
       .toDF("item", "n_exact", "n_cms")
     if (vals.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(vals.length.toDouble / numBatches).toInt)
-      vals.grouped(per).toSeq
-    }
     // every value feeds every row j: key the stream records by row
-    val in = MemoryStream[(Int, Long)](spark)
-    val name = runStreamToTable(spark, "cms_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_._1)
+    val feed = slices(vals, numBatches)
+      .map(_.flatMap(v => Sketches.CmsParams.indices.map(j => (j, v))))
+    val name = replay(spark, "cms_stream", feed, OutputMode.Update) { in =>
+      in.groupByKey(_._1)
         .mapGroupsWithState[(Vector[Long], Long), CmsProgress](
           GroupStateTimeout.NoTimeout) {
           (j: Int, it: Iterator[(Int, Long)],
@@ -1313,18 +1259,8 @@ object Streams {
             CmsProgress(j, seq0 + n, st)
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s =>
-        in.addData(s.toIndexedSeq.flatMap(v =>
-          Sketches.CmsParams.indices.map(j => (j, v))))
-        q.processAllAvailable()
-      }
     }
-    val counters = spark.table(name)
-      .groupBy($"j").agg(max_by($"counters", $"seq").as("counters"))
+    val counters = finalState(spark.table(name), "j")("counters")
       .select($"j", posexplode($"counters"))
       .select($"j", $"pos".cast("long").as("bucket"), $"col".as("c"))
       .filter($"c" > 0)
@@ -1349,8 +1285,6 @@ object Streams {
     */
   def histStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     import graft.operators.Sketches
     val evs = graft.Tables.events(spark, dir)
@@ -1361,14 +1295,9 @@ object Streams {
     val emptyOut = Seq.empty[(String, Long, Double, Double, Double)]
       .toDF("key", "total", "p50", "p95", "p99")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[(String, Double)](spark)
-    val name = runStreamToTable(spark, "hist_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_._1)
+    val name = replay(spark, "hist_stream", slices(evs, numBatches),
+        OutputMode.Update) { in =>
+      in.groupByKey(_._1)
         .mapGroupsWithState[(Vector[Long], Long), HistProgress](
           GroupStateTimeout.NoTimeout) {
           (key: String, it: Iterator[(String, Double)],
@@ -1386,14 +1315,8 @@ object Streams {
             HistProgress(key, seq0 + n, st)
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    val counts = spark.table(name)
-      .groupBy($"k").agg(max_by($"bins", $"seq").as("bins"))
+    val counts = finalState(spark.table(name), "k")("bins")
       .select($"k", posexplode($"bins"))
       .select($"k", $"pos".cast("long").as("bin"), $"col".as("n"))
       .filter($"n" > 0)
@@ -1426,8 +1349,6 @@ object Streams {
     */
   def funnelStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.GroupState
     import spark.implicits._
     val stages = graft.operators.Relational.FunnelStages.toIndexedSeq
     // feed in (tsu, user, type) order: per user this is exactly the
@@ -1442,16 +1363,11 @@ object Streams {
     val emptyOut = Seq.empty[FunnelProgress].toDS().toDF()
       .drop("seq")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[StampedType](spark)
-    val name = runStreamToTable(spark, "funnel_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    val name = replay(spark, "funnel_stream", slices(evs, numBatches),
+        OutputMode.Update) { in =>
+      in.groupByKey(_.user_id)
         .mapGroupsWithState[(Vector[Long], Long), FunnelProgress](
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+          GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[StampedType],
            gs: GroupState[(Vector[Long], Long)]) =>
             val (st0, seq0) = gs.getOption.getOrElse((Vector.empty[Long], 0L))
@@ -1465,19 +1381,9 @@ object Streams {
               st.lift(0), st.lift(1), st.lift(2), st.lift(3))
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    val all = spark.table(name)
-    // monotone seq -> the max_by(seq) row is each user's final state
-    all.groupBy($"user_id")
-      .agg(max_by(struct($"n_stages", $"t_signup", $"t_view", $"t_click",
-        $"t_purchase"), $"seq").as("f"))
-      .select($"user_id", $"f.n_stages", $"f.t_signup", $"f.t_view",
-        $"f.t_click", $"f.t_purchase")
+    finalState(spark.table(name), "user_id")(
+      "n_stages", "t_signup", "t_view", "t_click", "t_purchase")
       .orderBy($"user_id")
   }
 
@@ -1530,58 +1436,21 @@ object Streams {
     */
   def twsRunningStatsQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long, Long, Long)]
-      .toDF("user_id", "n_events", "cents_sum", "min_cents", "max_cents")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("user_id", "n_events", "cents_sum", "min_cents", "max_cents")
+    val name = replay(spark, "tws_stats", slices(evs, numBatches),
+        OutputMode.Update) { in =>
+      in.groupByKey(_.user_id)
+        .transformWithState(new RunningStatsProcessor, TimeMode.None(),
+          OutputMode.Update(), implicitly[Encoder[TwsStats]])
+        .toDF()
     }
-    // transformWithState requires the RocksDB provider; scope the
-    // override to this query and restore the session default after
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      val name = runStreamToTable(spark, "tws_stats", Some(4)) { (n, ck) =>
-        in.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new RunningStatsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(),
-            implicitly[org.apache.spark.sql.Encoder[TwsStats]])
-          .toDF()
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update).start()
-      } { q =>
-        slices.foreach { s =>
-          in.addData(s.toIndexedSeq); q.processAllAvailable()
-        }
-      }
-      spark.table(name)
-        .groupBy($"user_id")
-        .agg(max_by(struct($"n_events", $"cents_sum", $"min_cents",
-          $"max_cents"), $"seq").as("f"))
-        .select($"user_id", $"f.n_events", $"f.cents_sum",
-          $"f.min_cents", $"f.max_cents")
-        .orderBy($"user_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    finalState(spark.table(name), "user_id")(
+      "n_events", "cents_sum", "min_cents", "max_cents")
+      .orderBy($"user_id")
   }
 
   case class TwsTtlCount(user_id: Long, n: Long)
@@ -1616,9 +1485,9 @@ object Streams {
   }
 
   /** Driver-contract query with a FULL DuckDB oracle for TTL-configured
-    * state: the capped feed arrives in two slices with an inter-run
-    * sleep far past the 200 ms TTL, so every slice-1 counter has been
-    * store-evicted before slice 2 processes and each emission is a
+    * state: the capped feed arrives in two slices, the first one's
+    * batch held open far past the 200 ms TTL, so every slice-1 counter
+    * has been store-evicted before slice 2 processes and each emission is a
     * SLICE-LOCAL count. That makes the per-user sum of emissions equal
     * the plain batch count — an equality that holds ONLY because the
     * TTL fired (without eviction the second emission double-counts
@@ -1626,7 +1495,7 @@ object Streams {
     * count equal the number of slices containing that user, which the
     * oracle restates by splitting the event_id-ranked feed at
     * ceil(n/2). Deterministic because the sleep upper-bounds nothing:
-    * it only needs to EXCEED the TTL, and 2000 ms ≫ 200 ms.
+    * it only needs to EXCEED the TTL, and 600 ms ≫ 200 ms.
     *
     * Lifecycle note: TTL forces TimeMode.ProcessingTime, and in that
     * mode a stream NEVER quiesces — TransformWithStateExecBase
@@ -1635,90 +1504,42 @@ object Streams {
     * forever and BOTH processAllAvailable and Trigger.AvailableNow
     * block indefinitely (observed: 700+ empty commits; Spark's own TTL
     * suites sidestep this with a manual trigger clock the public API
-    * doesn't expose). The harness therefore waits on the OUTPUT — each
-    * slice produces exactly one data batch, so the feed polls the
-    * foreachBatch buffer until that batch's emissions land, then moves
-    * on, and the stream is stopped as soon as slice 2's batch is out.
+    * doesn't expose). [[replay]] therefore awaits each slice's batch
+    * by its committed source offset, and stops the stream as soon as
+    * slice 2's batch is out.
     */
   def twsTtlCountsQuery(spark: SparkSession, dir: String,
       ttlMs: Long = 200L, gapMs: Long = 600L): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    val emptyOut = Seq.empty[(Long, Long, Long)]
-      .toDF("user_id", "n_flushes", "n_events")
-    if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / 2).toInt)
-      evs.grouped(per).toSeq
-    }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
+    val evs = centFeed(spark, dir)
+    if (evs.isEmpty)
+      return Seq.empty[(Long, Long, Long)]
+        .toDF("user_id", "n_flushes", "n_events")
+    // appended on the stream thread, read after the stream stopped
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // volatile-free is fine: ArrayBuffer append happens on the stream
-    // thread, reads poll length with sleeps; synchronize for safety
-    def outSize: Int = out.synchronized(out.length)
-    def waitFor(n: Int): Unit = {
-      val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
-      while (outSize < n) {
-        if (System.nanoTime > deadline)
-          throw new IllegalStateException(
-            s"tws_ttl: slice $n emissions never arrived")
-        Thread.sleep(50)
-      }
-    }
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      runStreamToTable(spark, "tws_ttl", Some(4)) { (n, ck) =>
-        in.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new TtlCountProcessor(ttlMs),
-            org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-            OutputMode.Update(),
-            implicitly[org.apache.spark.sql.Encoder[TwsTtlCount]])
-          .toDF()
-          .writeStream
-          .queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            if (!b.isEmpty) {
-              val cp = b.materialized
-              out.synchronized { out += cp }
-              ()
-            }
-          }
-          .start()
-      } { _ =>
-        in.addData(slices.head.toIndexedSeq); waitFor(1)
-        if (slices.length > 1) {
-          // the sleep only needs to EXCEED the TTL (the TTL clock on
-          // every slice-1 key started at its state update, BEFORE
-          // waitFor(1) returned) — 3x margin; in ProcessingTime mode
-          // the stream runs ~300 ms no-data batches continuously, so
-          // every slept millisecond is paid in wall clock
-          Thread.sleep(gapMs)
-          in.addData(slices(1).toIndexedSeq); waitFor(2)
+    replay(spark, "tws_ttl", slices(evs, 2), OutputMode.Update,
+      sink = _.foreachBatch { (b: DataFrame, _: Long) =>
+        if (!b.isEmpty) {
+          out.synchronized { out += b.materialized }
+          // hold the first slice's batch open past the TTL, so every
+          // slice-1 key (its TTL clock started at this batch) has
+          // expired when slice 2 arrives — 3x margin; in ProcessingTime
+          // mode the stream runs ~300 ms no-data batches continuously,
+          // so every slept millisecond is paid in wall clock
+          if (out.synchronized(out.length) == 1) Thread.sleep(gapMs)
         }
-      }
-      out.foldLeft(Seq.empty[(Long, Long)].toDF("user_id", "n"))(
-          _ unionByName _)
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n_flushes"), sum($"n").as("n_events"))
-        .orderBy($"user_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
+      }) { in =>
+      in.groupByKey(_.user_id)
+        .transformWithState(new TtlCountProcessor(ttlMs),
+          TimeMode.ProcessingTime(), OutputMode.Update(),
+          implicitly[Encoder[TwsTtlCount]])
+        .toDF()
     }
+    out.foldLeft(Seq.empty[(Long, Long)].toDF("user_id", "n"))(
+        _ unionByName _)
+      .groupBy($"user_id")
+      .agg(count(lit(1)).as("n_flushes"), sum($"n").as("n_events"))
+      .orderBy($"user_id")
   }
 
   case class TwsSession(user_id: Long, session_id: Long, n_events: Long,
@@ -1806,56 +1627,27 @@ object Streams {
   def twsTimerSessionsQuery(spark: SparkSession, dir: String,
       gapUs: Long = 12L * 3600 * 1000000L,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"event_id", $"user_id",
-        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
-      .orderBy($"event_id")
-      .as[StampedRow].collect()
+    val evs = stampedFeed(spark, dir)
     val emptyOut = Seq.empty[(Long, Long, Long, Long, Long)]
       .toDF("user_id", "session_id", "n_events", "t_start", "t_end")
     if (evs.isEmpty) return emptyOut
     val maxUs = evs.map(r => r.ts.getTime * 1000 + r.ts.getNanos / 1000 % 1000).max
     val sentinel = StampedRow(-1L, -1L,
       new java.sql.Timestamp((maxUs + TimerSentinelUs) / 1000), 0.0)
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
+    val name = replay(spark, "tws_timer_sessions",
+        slices(evs, numBatches) :+ Seq(sentinel), OutputMode.Append) { in =>
+      in.withWatermark("ts", "1 hour")
+        .groupByKey(_.user_id)
+        .transformWithState(new TimerSessionProcessor(gapUs),
+          TimeMode.EventTime(), OutputMode.Append(),
+          implicitly[Encoder[TwsSession]])
+        .toDF()
     }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[StampedRow](spark)
-      val name = runStreamToTable(spark, "tws_timer_sessions", Some(4)) { (n, ck) =>
-        in.toDS()
-          .withWatermark("ts", "1 hour")
-          .groupByKey(_.user_id)
-          .transformWithState(new TimerSessionProcessor(gapUs),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append(),
-            implicitly[org.apache.spark.sql.Encoder[TwsSession]])
-          .toDF()
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Append).start()
-      } { q =>
-        slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-        in.addData(sentinel); q.processAllAvailable()
-      }
-      spark.table(name)
-        .filter($"user_id" >= 0)
-        .select($"user_id", $"session_id", $"n_events", $"t_start", $"t_end")
-        .orderBy($"user_id", $"session_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    spark.table(name)
+      .filter($"user_id" >= 0)
+      .select($"user_id", $"session_id", $"n_events", $"t_start", $"t_end")
+      .orderBy($"user_id", $"session_id")
   }
 
   case class RecentItems(user_id: Long, seq: Long, items: String)
@@ -1938,45 +1730,34 @@ object Streams {
     * the oracle.
     */
   def twsRecentItemsQuery(spark: SparkSession, dir: String,
-      numBatches: Int = 2): DataFrame =
-    twsDriver(spark, dir, numBatches, "tws_recent") { in =>
-      val sp = in.sparkSession
-      import sp.implicits._
+      numBatches: Int = 2): DataFrame = {
+    import spark.implicits._
+    val name = replay(spark, "tws_recent", slices(centFeed(spark, dir), numBatches),
+        OutputMode.Update) { in =>
       in.groupByKey(_.user_id)
-        .transformWithState(new RecentItemsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          implicitly[org.apache.spark.sql.Encoder[RecentItems]])
+        .transformWithState(new RecentItemsProcessor, TimeMode.None(),
+          OutputMode.Update(), implicitly[Encoder[RecentItems]])
         .toDF()
-    } { (spark, table) =>
-      import spark.implicits._
-      spark.table(table)
-        .groupBy($"user_id")
-        .agg(max_by($"items", $"seq").as("items"))
-        .orderBy($"user_id")
     }
+    finalState(spark.table(name), "user_id")("items").orderBy($"user_id")
+  }
 
   /** MapState counter query: final per-(user, kind) counts == batch
     * groupBy — the oracle.
     */
   def twsMapCountsQuery(spark: SparkSession, dir: String,
-      numBatches: Int = 2): DataFrame =
-    twsDriver(spark, dir, numBatches, "tws_map") { in =>
-      val sp = in.sparkSession
-      import sp.implicits._
+      numBatches: Int = 2): DataFrame = {
+    import spark.implicits._
+    val name = replay(spark, "tws_map", slices(centFeed(spark, dir), numBatches),
+        OutputMode.Update) { in =>
       in.groupByKey(_.user_id)
-        .transformWithState(new MapCountsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          implicitly[org.apache.spark.sql.Encoder[TypeCount]])
+        .transformWithState(new MapCountsProcessor, TimeMode.None(),
+          OutputMode.Update(), implicitly[Encoder[TypeCount]])
         .toDF()
-    } { (spark, table) =>
-      import spark.implicits._
-      spark.table(table)
-        .groupBy($"user_id", $"kind")
-        .agg(max_by($"cnt", $"seq").as("cnt"))
-        .orderBy($"user_id", $"kind")
     }
+    finalState(spark.table(name), "user_id", "kind")("cnt")
+      .orderBy($"user_id", $"kind")
+  }
 
   case class WarmState(user_id: Long, n_events: Long, cents_sum: Long)
 
@@ -2032,7 +1813,6 @@ object Streams {
     */
   def twsInitialStateQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     // adaptive split: half the OBSERVED id range, so the stream half is
     // non-empty at every scale factor (a fixed cap/2 leaves the stream
@@ -2040,12 +1820,7 @@ object Streams {
     val half = graft.Tables.events(spark, dir)
       .filter($"event_id" < HarnessFeedCap)
       .agg(expr("(max(event_id) + 1) div 2")).head().getLong(0)
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" >= half && $"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
+    val evs = centFeed(spark, dir, from = half)
     val warm = graft.Tables.events(spark, dir)
       .filter($"event_id" < half)
       .select($"user_id",
@@ -2056,88 +1831,16 @@ object Streams {
     val emptyOut = Seq.empty[(Long, Long, Long)]
       .toDF("user_id", "n_events", "cents_sum")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
+    val name = replay(spark, "tws_warm", slices(evs, numBatches),
+        OutputMode.Update) { in =>
+      in.groupByKey(_.user_id)
+        .transformWithState(new WarmStartProcessor, TimeMode.None(),
+          OutputMode.Update(), warm.groupByKey(_.user_id),
+          implicitly[Encoder[TwsStats]], implicitly[Encoder[WarmState]])
+        .toDF()
     }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      val name = runStreamToTable(spark, "tws_warm", Some(4)) { (n, ck) =>
-        in.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new WarmStartProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(),
-            warm.groupByKey(_.user_id),
-            implicitly[org.apache.spark.sql.Encoder[TwsStats]],
-            implicitly[org.apache.spark.sql.Encoder[WarmState]])
-          .toDF()
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update).start()
-      } { q =>
-        slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-      }
-      spark.table(name)
-        .groupBy($"user_id")
-        .agg(max_by(struct($"n_events", $"cents_sum"), $"seq").as("f"))
-        .select($"user_id", $"f.n_events", $"f.cents_sum")
-        .orderBy($"user_id")
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-  }
-
-  /** Shared TWS harness: capped CentEvent feed in event_id order,
-    * RocksDB provider scoped to the query, slices fed through a
-    * MemoryStream, finisher reduces the Update-mode emissions.
-    */
-  private def twsDriver(spark: SparkSession, dir: String, numBatches: Int,
-      name: String)(
-      pipe: org.apache.spark.sql.Dataset[CentEvent] => DataFrame)(
-      finish: (SparkSession, String) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
-    if (evs.isEmpty)
-      return Seq.empty[(Long, String)].toDF("user_id", "items")
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[CentEvent](spark)
-      val tbl = runStreamToTable(spark, name, Some(4)) { (n, ck) =>
-        pipe(in.toDS())
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Update).start()
-      } { q =>
-        slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
-      }
-      finish(spark, tbl)
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    finalState(spark.table(name), "user_id")("n_events", "cents_sum")
+      .orderBy($"user_id")
   }
 
   /** Streaming EWMA: the per-user exponential recency score
@@ -2151,26 +1854,14 @@ object Streams {
     */
   def ewmaStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
+    val evs = centFeed(spark, dir)
     val emptyOut = Seq.empty[(Long, Long, Long)]
       .toDF("user_id", "n_events", "ewma_cents")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[CentEvent](spark)
-    val name = runStreamToTable(spark, "ewma_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    val name = replay(spark, "ewma_stream", slices(evs, numBatches),
+        OutputMode.Update) { in =>
+      in.groupByKey(_.user_id)
         .mapGroupsWithState[(Long, Long), EwmaProgress](
           GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[CentEvent], gs: GroupState[(Long, Long)]) =>
@@ -2183,16 +1874,8 @@ object Streams {
             EwmaProgress(uid, cnt, cnt, ewma)
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Update).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
-    spark.table(name)
-      .groupBy($"user_id")
-      .agg(max_by(struct($"n_events", $"ewma_cents"), $"seq").as("f"))
-      .select($"user_id", $"f.n_events", $"f.ewma_cents")
+    finalState(spark.table(name), "user_id")("n_events", "ewma_cents")
       .orderBy($"user_id")
   }
 
@@ -2211,25 +1894,13 @@ object Streams {
     */
   def anomalyStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"user_id", $"event_id",
-        ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .orderBy($"event_id")
-      .as[CentEvent].collect()
+    val evs = centFeed(spark, dir)
     val emptyOut = Seq.empty[AnomalyFlag].toDS().toDF()
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[CentEvent](spark)
-    val name = runStreamToTable(spark, "anomaly_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    val name = replay(spark, "anomaly_stream", slices(evs, numBatches),
+        OutputMode.Append) { in =>
+      in.groupByKey(_.user_id)
         .flatMapGroupsWithState[(Long, Long, Long), AnomalyFlag](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[CentEvent],
@@ -2247,14 +1918,29 @@ object Streams {
             out.iterator
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
     spark.table(name).orderBy($"event_id")
   }
+
+  /** The capped event feed with µs event time, event_id order. */
+  private def stampedFeed(spark: SparkSession, dir: String): Array[StampedRow] = {
+    import spark.implicits._
+    graft.Tables.events(spark, dir)
+      .filter($"event_id" < HarnessFeedCap)
+      .select($"event_id", $"user_id",
+        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
+      .orderBy($"event_id")
+      .as[StampedRow].collect()
+  }
+
+  /** Every batch after the first re-sends its predecessor: duplicates
+    * are guaranteed to arrive in a LATER trigger, exercising the
+    * cross-trigger key state, not just intra-batch distinct.
+    */
+  private def resent[T](batches: Seq[Seq[T]]): Seq[Seq[T]] =
+    batches.zipWithIndex.map { case (s, i) =>
+      if (i == 0) s else batches(i - 1) ++ s
+    }
 
   /** Streaming exact dedup — `dropDuplicates` on the event key under a
     * WATERMARK, the canonical Structured Streaming dedup: duplicate
@@ -2273,40 +1959,17 @@ object Streams {
     */
   def dedupStreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"event_id", $"user_id",
-        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
-      .orderBy($"event_id")
-      .as[StampedRow].collect()
+    val evs = stampedFeed(spark, dir)
     val emptyOut = Seq.empty[(Long, Long, Double)]
       .toDF("event_id", "user_id", "value")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    // every slice after the first re-sends its predecessor: duplicates
-    // are guaranteed to arrive in a LATER trigger, exercising the
-    // cross-trigger key state, not just intra-batch distinct
-    val feeds = slices.zipWithIndex.map { case (s, i) =>
-      if (i == 0) s else slices(i - 1) ++ s
-    }
-    val in = MemoryStream[StampedRow](spark)
-    val name = runStreamToTable(spark, "dedup_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .withWatermark("ts", "1 hour")
-        .dropDuplicates("event_id")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      // dedup in Append emits first arrivals immediately; re-sent rows
-      // are suppressed by key state (or dropped as late once the
-      // watermark passes them — either way never emitted twice)
-      feeds.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
+    // dedup in Append emits first arrivals immediately; re-sent rows
+    // are suppressed by key state (or dropped as late once the
+    // watermark passes them — either way never emitted twice)
+    val name = replay(spark, "dedup_stream", resent(slices(evs, numBatches)),
+        OutputMode.Append) {
+      _.withWatermark("ts", "1 hour").dropDuplicates("event_id").toDF()
     }
     spark.table(name)
       .select($"event_id", $"user_id", $"value")
@@ -2332,34 +1995,14 @@ object Streams {
     */
   def dedupWithinWatermarkQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val evs = graft.Tables.events(spark, dir)
-      .filter($"event_id" < HarnessFeedCap)
-      .select($"event_id", $"user_id",
-        expr("timestamp_micros(ts div 1000)").as("ts"), $"value")
-      .orderBy($"event_id")
-      .as[StampedRow].collect()
+    val evs = stampedFeed(spark, dir)
     val emptyOut = Seq.empty[(Long, Long, Double)]
       .toDF("event_id", "user_id", "value")
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val feeds = slices.zipWithIndex.map { case (s, i) =>
-      if (i == 0) s else slices(i - 1) ++ s
-    }
-    val in = MemoryStream[StampedRow](spark)
-    val name = runStreamToTable(spark, "dedup_within_wm", Some(4)) { (n, ck) =>
-      in.toDS()
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      feeds.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
+    val name = replay(spark, "dedup_within_wm", resent(slices(evs, numBatches)),
+        OutputMode.Append) {
+      _.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("event_id").toDF()
     }
     spark.table(name)
       .select($"event_id", $"user_id", $"value")
@@ -2381,8 +2024,6 @@ object Streams {
     */
   def scd2StreamQuery(spark: SparkSession, dir: String,
       numBatches: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     val evs = graft.Tables.events(spark, dir)
       .filter($"event_id" < HarnessFeedCap)
@@ -2392,14 +2033,9 @@ object Streams {
       .as[AttrEvent].collect()
     val emptyOut = Seq.empty[Scd2Closed].toDF()
     if (evs.isEmpty) return emptyOut
-    val slices = {
-      val per = math.max(1, math.ceil(evs.length.toDouble / numBatches).toInt)
-      evs.grouped(per).toSeq
-    }
-    val in = MemoryStream[AttrEvent](spark)
-    val name = runStreamToTable(spark, "scd2_stream", Some(4)) { (n, ck) =>
-      in.toDS()
-        .groupByKey(_.user_id)
+    val name = replay(spark, "scd2_stream", slices(evs, numBatches),
+        OutputMode.Append) { in =>
+      in.groupByKey(_.user_id)
         .flatMapGroupsWithState[Scd2Open, Scd2Closed](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
           (uid: Long, it: Iterator[AttrEvent], gs: GroupState[Scd2Open]) =>
@@ -2418,11 +2054,6 @@ object Streams {
             out.iterator
         }
         .toDF()
-        .writeStream.format("memory").queryName(n)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append).start()
-    } { q =>
-      slices.foreach { s => in.addData(s.toIndexedSeq); q.processAllAvailable() }
     }
     spark.table(name)
       .select($"user_id", $"attr", $"valid_from", $"valid_to", $"version")
@@ -2488,7 +2119,6 @@ object Streams {
     * history = odd — a set-based, scale-free split.
     */
   def streamingRecommendE2eQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val empty = Seq.empty[(Int, Int, Long, String)]
       .toDF("userid", "songid", "score_uppm", "payload")
@@ -2501,47 +2131,41 @@ object Streams {
       .filter($"event_id" < HarnessFeedCap && $"event_id" % 2 === 1)
       .selectExpr("userid AS userId", "songid AS songId",
         "CAST(rating AS FLOAT) AS rating")
-    val in = MemoryStream[String](spark)
-    in.addData(streamLines.toIndexedSeq)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    runStreamToTable(spark, "recommend_e2e", None) { (n, ck) =>
-      in.toDF().writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ck)
-        .queryName(n)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) { // ST4 empty-batch skip
-            val fresh = decodeRateEvents(batch)
-              .selectExpr("userid AS userId", "songid AS songId",
-                "CAST(rating AS FLOAT) AS rating")
-            val all = history.unionByName(fresh).cache() // ST5
-            val model = graft.ml.Recommender.train(all, rank = 4) // M5
-            val f = graft.ml.Recommender
-              .exportTrainedFactors(model, E2eFactorsPath)
-            // bounded: 1 row (argmax)
-            val topUser = fresh.groupBy($"userId")
-              .agg(count(lit(1)).as("n"))
-              .orderBy($"n".desc, $"userId").limit(1)
-              .collect()(0).getInt(0)
-            val rated = all.filter($"userId" === topUser)
-              .select($"songId").distinct()
-            val cand = all.groupBy($"songId").agg(count(lit(1)).as("cnt"))
-              .filter($"cnt" >= 5)
-              .join(rated, Seq("songId"), "left_anti")
-            val recs = graft.ml.Recommender.predictFromFactors(f,
-                cand.select(lit(topUser).as("userId"), $"songId"))
-              .orderBy($"prediction".desc, $"songId").limit(25)
-              .select($"userId".as("userid"), $"songId".as("songid"),
-                floor($"prediction" * lit(1000000.0)).cast("long")
-                  .as("score_uppm"))
-            out += recs.withColumn("payload",
-                to_json(struct($"userid", $"songid", $"score_uppm")))
-              .materialized
-            all.unpersist()
-            ()
-          }
-        }.start()
-    } { q => q.processAllAvailable() }
+    replay(spark, "recommend_e2e", slices(streamLines, 1), OutputMode.Append,
+        statePartitions = None,
+        sink = _.foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) { // ST4 empty-batch skip
+          val fresh = decodeRateEvents(batch)
+            .selectExpr("userid AS userId", "songid AS songId",
+              "CAST(rating AS FLOAT) AS rating")
+          val all = history.unionByName(fresh).cache() // ST5
+          val model = graft.ml.Recommender.train(all, rank = 4) // M5
+          val f = graft.ml.Recommender
+            .exportTrainedFactors(model, E2eFactorsPath)
+          // bounded: 1 row (argmax)
+          val topUser = fresh.groupBy($"userId")
+            .agg(count(lit(1)).as("n"))
+            .orderBy($"n".desc, $"userId").limit(1)
+            .collect()(0).getInt(0)
+          val rated = all.filter($"userId" === topUser)
+            .select($"songId").distinct()
+          val cand = all.groupBy($"songId").agg(count(lit(1)).as("cnt"))
+            .filter($"cnt" >= 5)
+            .join(rated, Seq("songId"), "left_anti")
+          val recs = graft.ml.Recommender.predictFromFactors(f,
+              cand.select(lit(topUser).as("userId"), $"songId"))
+            .orderBy($"prediction".desc, $"songId").limit(25)
+            .select($"userId".as("userid"), $"songId".as("songid"),
+              floor($"prediction" * lit(1000000.0)).cast("long")
+                .as("score_uppm"))
+          out += recs.withColumn("payload",
+              to_json(struct($"userid", $"songid", $"score_uppm")))
+            .materialized
+          all.unpersist()
+          ()
+        }
+      })(_.toDF())
     out.foldLeft(empty)(_ unionByName _).orderBy($"songid")
   }
 }

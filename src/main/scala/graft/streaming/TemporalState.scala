@@ -78,7 +78,6 @@ object TemporalState {
     */
   def streamingAsofQuery(spark: SparkSession, dir: String,
       cap: Long = 10000L): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val ev = graft.Tables.events(spark, dir)
@@ -89,17 +88,8 @@ object TemporalState {
       .collect() // bounded: cap (HarnessFeedCap-style event_id predicate)
       .map(r => AsofIn(r.getLong(1), r.getLong(2),
         if (r.getString(4) == "click") 0 else 1, r.getLong(0), r.getDouble(3)))
-    val in = MemoryStream[AsofIn](spark)
-    val name = Streams.runStreamToTable(spark, "asof_enrich", Some(4)) {
-      (n, ck) =>
-        asofEnrich(in.toDS())
-          .writeStream.format("memory").queryName(n)
-          .option("checkpointLocation", ck)
-          .outputMode(OutputMode.Append).start()
-    } { q =>
-      in.addData(ev.toIndexedSeq)
-      q.processAllAvailable()
-    }
+    val name = Streams.replay(spark, "asof_enrich", Streams.slices(ev, 1),
+      OutputMode.Append)(asofEnrich(_).toDF())
     spark.table(name)
       .select(col("event_id"), col("user_id"), col("tsu"), col("value"),
         col("click_id"), col("click_tsu"))
