@@ -97,9 +97,14 @@ object Bench {
     def jmap(kvs: Seq[(String, Double)]) =
       kvs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
         .mkString("{", ",", "}")
-    // -1 marks a failed query; don't let it shrink the total
+    // -1 marks a failed query. The totals leave it out, so a failure
+    // shrinks them; `n_failed` and `failed` (the queries with a -1 in
+    // either pass) sit before the totals in both records to say so.
     val total = best.collect { case (_, v) if v >= 0 => v }.sum
     val totalNoSort = noSort.values.filter(_ >= 0).sum
+    val failed = best.collect { case (n, v) if v < 0 || noSort(n) < 0 => n }
+    val failures = s""""n_failed":${failed.size},"failed":""" +
+      failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // The harness that records this run keeps only the LAST ~2000
     // chars of output, so layout is deliberate: inside the (long)
     // metric line both per-query maps are ordered by time ASCENDING —
@@ -110,7 +115,7 @@ object Bench {
     // of an arbitrary alphabetical half.
     val qs = jmap(best.sortBy(_._2))
     val ns = jmap(noSort.toSeq.sortBy(_._2))
-    println(s"""{"metric":"total","unit":"sec","queries_nosort":$ns,"queries":$qs,"nosort_value":${r3(totalNoSort)},"value":${r3(total)},"n_queries":${best.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","unit":"sec","queries_nosort":$ns,"queries":$qs,$failures,"nosort_value":${r3(totalNoSort)},"value":${r3(total)},"n_queries":${best.size},"sf":"$sfDir"}""")
     // setup/query split (min-of-3 setup seconds) for queries whose
     // construction does real work — the write-dominated dsv2/
     // streaming contract queries. Only entries with >= 0.1 s of setup
@@ -123,7 +128,7 @@ object Bench {
     // (committed at round end), so every query's time is recoverable
     // even when the stdout capture truncates the line above.
     val fullRecord =
-      s"""{"metric":"total","unit":"sec","value":${r3(total)},"nosort_value":${r3(totalNoSort)},"n_queries":${best.size},"sf":"$sfDir","queries":${jmap(best)},"queries_nosort":${jmap(noSort.toSeq.sortBy(_._1))},"queries_setup":${jmap(setupBest)}}"""
+      s"""{"metric":"total","unit":"sec",$failures,"value":${r3(total)},"nosort_value":${r3(totalNoSort)},"n_queries":${best.size},"sf":"$sfDir","queries":${jmap(best)},"queries_nosort":${jmap(noSort.toSeq.sortBy(_._1))},"queries_setup":${jmap(setupBest)}}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
         (fullRecord + "\n").getBytes("UTF-8"))

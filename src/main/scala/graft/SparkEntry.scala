@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The declared query surface and its oracle SQL (SURVEY.md §7).
   *
   * Every `queries` entry has a DuckDB-runnable mirror in `oracleSql`
   * (same column names, same ordering, same fixed-point arithmetic — see

@@ -34,12 +34,21 @@ object Recommender {
 
   /** M1 ALS train, reference hyperparameters by default
     * (spark_music.py:33: rank grid member, 10 iters, lambda 0.1, seed 5).
+    *
+    * The user and item factor blocks number the session's
+    * `defaultParallelism`: the auto rule of the reference's mllib
+    * `ALS.train(…, blocks = -1)`, without its half-the-input-partitions
+    * term. spark.ml's default is a fixed 10 × 10, which schedules more
+    * tasks than a small session has cores on every iteration stage.
+    * The count is not taken from the input's partitioning, because
+    * under AQE that plans and runs the input a second time.
     */
   def train(df: DataFrame, rank: Int = 4, maxIter: Int = 10,
       regParam: Double = 0.1, seed: Long = 5L): ALSModel =
     new ALS()
       .setUserCol("userId").setItemCol("songId").setRatingCol("rating")
       .setRank(rank).setMaxIter(maxIter).setRegParam(regParam).setSeed(seed)
+      .setNumBlocks(df.sparkSession.sparkContext.defaultParallelism)
       .setColdStartStrategy("drop")
       .fit(df)
 
@@ -107,6 +116,11 @@ object Recommender {
     * top-k. Typical feeds converge in one pass; the escalation is a
     * driver-side loop over tiny aggregates, never a collect of
     * candidates.
+    *
+    * Besides the per-song counts, the work follows the requested users,
+    * not the history: the rated pairs are cut to those users before
+    * their `distinct`, and the users are counted only when a pass that
+    * ranked less than the whole catalog needs its completeness check.
     */
   def recommendTopKUsers(model: ALSModel, ratings: DataFrame,
       users: DataFrame, k: Int = 25, minCnt: Long = 25): DataFrame = {
@@ -115,9 +129,10 @@ object Recommender {
     import org.apache.spark.sql.expressions.Window
     val eligible = ratings.groupBy($"songId")
       .agg(count(lit(1)).as("cnt")).filter($"cnt" >= minCnt)
-    val rated = ratings.select($"userId", $"songId").distinct()
+    val rated = ratings.select($"userId", $"songId")
+      .join(users.select($"userId"), Seq("userId"), "left_semi").distinct()
     val nItems = model.itemFactors.count()
-    val nUsers = users.select($"userId").distinct().count()
+    lazy val nUsers = users.select($"userId").distinct().count()
     val w = Window.partitionBy($"userId")
       .orderBy($"prediction".desc, $"songId")
     var n: Long = math.max(4L * k, 64L)

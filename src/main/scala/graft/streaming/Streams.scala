@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Fx.FxMaterialize
 import graft.functions.PseudoJson
+import org.apache.spark.ml.recommendation.ALSModel
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -2060,10 +2061,33 @@ object Streams {
       .orderBy($"user_id", $"version")
   }
 
+  /** The per-batch refit of both recommend loops: decode the batch to
+    * (userId, songId, rating), union it with the static history and
+    * cache the union (ST5), and fully refit ALS on it, rank 4 (M5; the
+    * reference has no incremental update). `body` gets (fresh, all,
+    * model); the union is released when it returns or throws, so no
+    * cached history outlives its batch.
+    */
+  private def refit(history: DataFrame, batch: DataFrame)(
+      body: (DataFrame, DataFrame, ALSModel) => Unit): Unit = {
+    val fresh = decodeRateEvents(batch)
+      .selectExpr("userid AS userId", "songid AS songId",
+        "CAST(rating AS FLOAT) AS rating")
+    val all = history.unionByName(fresh).cache()
+    try body(fresh, all, graft.ml.Recommender.train(all, rank = 4))
+    finally all.unpersist()
+  }
+
   /** ST2/ST5 streaming recommend loop (spark_streaming_kafka.py:11–60):
     * per 1s batch — decode, union with static history, retrain ALS,
     * emit top-K for the batch's users. The batch body is the §2.11
     * pipeline; `emit` receives (recommendations, batchId).
+    *
+    * Every non-empty batch is a full refit over history + batch. Its
+    * factor blocks number the session's `defaultParallelism`, mllib's
+    * `blocks = -1` rule (see [[graft.ml.Recommender.train]]), so the
+    * refit's fixed per-batch cost follows the cores, not spark.ml's
+    * 10 × 10 default.
     */
   def recommendLoop(events: DataFrame, history: DataFrame,
       checkpoint: String, k: Int = 25, minCnt: Long = 25,
@@ -2075,21 +2099,16 @@ object Streams {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) { // ST4 empty-batch skip
-          val fresh = decodeRateEvents(batch)
-            .selectExpr("userid AS userId", "songid AS songId",
-              "CAST(rating AS FLOAT) AS rating")
-          val all = history.unionByName(fresh).cache() // ST5 stream-static union
-          val model = graft.ml.Recommender.train(all, rank = 4) // M5 full refit
-          // ONE blocked top-k job for every batch user — a factor
-          // matmul with per-block pruning via recommendForUserSubset,
-          // never a users x catalog row cartesian (M6 gates applied as
-          // post-filters with escalation; see recommendTopKUsers)
-          val users = fresh.select("userId").distinct()
-          val recs = graft.ml.Recommender
-            .recommendTopKUsers(model, all, users, k, minCnt)
-          emit(recs, id)
-          all.unpersist()
-          ()
+          refit(history, batch) { (fresh, all, model) =>
+            // ONE blocked top-k job for every batch user — a factor
+            // matmul with per-block pruning via recommendForUserSubset,
+            // never a users x catalog row cartesian (M6 gates applied as
+            // post-filters with escalation; see recommendTopKUsers)
+            val users = fresh.select("userId").distinct()
+            val recs = graft.ml.Recommender
+              .recommendTopKUsers(model, all, users, k, minCnt)
+            emit(recs, id)
+          }
         }
       }
 
@@ -2136,34 +2155,29 @@ object Streams {
         statePartitions = None,
         sink = _.foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) { // ST4 empty-batch skip
-          val fresh = decodeRateEvents(batch)
-            .selectExpr("userid AS userId", "songid AS songId",
-              "CAST(rating AS FLOAT) AS rating")
-          val all = history.unionByName(fresh).cache() // ST5
-          val model = graft.ml.Recommender.train(all, rank = 4) // M5
-          val f = graft.ml.Recommender
-            .exportTrainedFactors(model, E2eFactorsPath)
-          // bounded: 1 row (argmax)
-          val topUser = fresh.groupBy($"userId")
-            .agg(count(lit(1)).as("n"))
-            .orderBy($"n".desc, $"userId").limit(1)
-            .collect()(0).getInt(0)
-          val rated = all.filter($"userId" === topUser)
-            .select($"songId").distinct()
-          val cand = all.groupBy($"songId").agg(count(lit(1)).as("cnt"))
-            .filter($"cnt" >= 5)
-            .join(rated, Seq("songId"), "left_anti")
-          val recs = graft.ml.Recommender.predictFromFactors(f,
-              cand.select(lit(topUser).as("userId"), $"songId"))
-            .orderBy($"prediction".desc, $"songId").limit(25)
-            .select($"userId".as("userid"), $"songId".as("songid"),
-              floor($"prediction" * lit(1000000.0)).cast("long")
-                .as("score_uppm"))
-          out += recs.withColumn("payload",
-              to_json(struct($"userid", $"songid", $"score_uppm")))
-            .materialized
-          all.unpersist()
-          ()
+          refit(history, batch) { (fresh, all, model) =>
+            val f = graft.ml.Recommender
+              .exportTrainedFactors(model, E2eFactorsPath)
+            // bounded: 1 row (argmax)
+            val topUser = fresh.groupBy($"userId")
+              .agg(count(lit(1)).as("n"))
+              .orderBy($"n".desc, $"userId").limit(1)
+              .collect()(0).getInt(0)
+            val rated = all.filter($"userId" === topUser)
+              .select($"songId").distinct()
+            val cand = all.groupBy($"songId").agg(count(lit(1)).as("cnt"))
+              .filter($"cnt" >= 5)
+              .join(rated, Seq("songId"), "left_anti")
+            val recs = graft.ml.Recommender.predictFromFactors(f,
+                cand.select(lit(topUser).as("userId"), $"songId"))
+              .orderBy($"prediction".desc, $"songId").limit(25)
+              .select($"userId".as("userid"), $"songId".as("songid"),
+                floor($"prediction" * lit(1000000.0)).cast("long")
+                  .as("score_uppm"))
+            out += recs.withColumn("payload",
+                to_json(struct($"userid", $"songid", $"score_uppm")))
+              .materialized
+          }
         }
       })(_.toDF())
     out.foldLeft(empty)(_ unionByName _).orderBy($"songid")

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** S8 executed (not just spec'd): the JDBC sink running against an
   * embedded Derby database — the in-JVM stand-in for the reference's
-  * SQL-Server target (rating_data_to_longdb.txt:4–30). Derby ships in
-  * /opt/spark/jars, so this is a real DriverManager/JDBC round-trip
+  * SQL-Server target (rating_data_to_longdb.txt:4–30). Derby ships
+  * with Spark's jars, so this is a real DriverManager/JDBC round-trip
   * through Spark's JDBC source/sink, no extra dependency.
   */
 class JdbcSpec extends AnyFunSuite {

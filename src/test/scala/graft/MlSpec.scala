@@ -1,7 +1,7 @@
 package graft
 
 import graft.ml.Recommender
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ALS layer (SURVEY §2.11): reference protocol reproduced on the
@@ -19,6 +19,14 @@ class MlSpec extends AnyFunSuite {
     val f1 = m1.userFactors.orderBy("id").collect().map(_.toString)
     val f2 = m2.userFactors.orderBy("id").collect().map(_.toString)
     assert(f1.sameElements(f2))
+  }
+
+  test("ALS factor blocks number the session's defaultParallelism") {
+    // mllib's blocks = -1 rule, not spark.ml's fixed 10 x 10
+    val m = Recommender.train(Recommender.ratings(spark, sf), maxIter = 1)
+    val want = spark.sparkContext.defaultParallelism
+    assert(m.userFactors.rdd.getNumPartitions == want)
+    assert(m.itemFactors.rdd.getNumPartitions == want)
   }
 
   test("ALS recovers a low-rank ratings matrix (RMSE << value scale)") {
@@ -127,13 +135,18 @@ class MlSpec extends AnyFunSuite {
     val model = Recommender.train(all, rank = 4, maxIter = 5)
     val users = all.select("userId").distinct()
       .orderBy("userId").limit(6).cache()
+    // a batch's users may repeat, and may include an id the ratings
+    // (and so the model) have never seen
+    val first = users.head().getInt(0)
+    val unseen = all.agg(max("userId")).head().getInt(0) + 1
+    val oddUsers = users.union(Seq(first, unseen).toDF("userId")).cache()
 
     // the reference M6 formulation (what recommendLoop used to build
     // explicitly): users x eligible minus rated, full transform, top-k
-    def referenceForm(k: Int, minCnt: Long) = {
+    def referenceForm(us: DataFrame, k: Int, minCnt: Long) = {
       val eligible = all.groupBy("songId")
         .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= minCnt)
-      val cand = users.crossJoin(eligible.select("songId"))
+      val cand = us.distinct().crossJoin(eligible.select("songId"))
         .join(all.select("userId", "songId").distinct(),
           Seq("userId", "songId"), "left_anti")
       val w = Window.partitionBy("userId")
@@ -145,17 +158,17 @@ class MlSpec extends AnyFunSuite {
 
     // one config that converges in the first blocked pass and one whose
     // aggressive post-filter forces the numItems escalation path
-    for ((k, minCnt) <- Seq((5, 1L), (3, 15L))) {
-      val got = Recommender.recommendTopKUsers(model, all, users, k, minCnt)
+    for (us <- Seq(users, oddUsers); (k, minCnt) <- Seq((5, 1L), (3, 15L))) {
+      val got = Recommender.recommendTopKUsers(model, all, us, k, minCnt)
       assert(!got.queryExecution.executedPlan.toString
         .contains("BroadcastNestedLoopJoin"),
         "post-filter side must not nested-loop over the catalog")
       val g = got.select("userId", "songId").collect()
         .map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
-      val w = referenceForm(k, minCnt).select("userId", "songId").collect()
+      val w = referenceForm(us, k, minCnt).select("userId", "songId").collect()
         .map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
-      assert(g == w, s"k=$k minCnt=$minCnt: blocked top-k must equal " +
-        s"the crossJoin formulation")
+      assert(g == w, s"${us.count()} user rows, k=$k minCnt=$minCnt: " +
+        "blocked top-k must equal the crossJoin formulation")
     }
   }
 

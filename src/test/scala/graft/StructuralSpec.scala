@@ -48,4 +48,36 @@ class StructuralSpec extends AnyFunSuite {
         "exact-decimal accumulator to BIGINT/DOUBLE at the end):\n" +
         offenders.mkString("\n"))
   }
+
+  test("no source under src/ names an absolute path outside the repo, " +
+      "the test data and the scratch roots") {
+    import scala.jdk.CollectionConverters._
+    // an absolute path starts at a standard top-level directory; a
+    // literal such as "/t" or "/data/snap-1" is a suffix for a base
+    // directory chosen at run time, and "a/tmp" is a relative path
+    val absolute = ("""(?<![\w.$}\-])/(?:bin|boot|dev|etc|home|lib|lib64|""" +
+      """media|mnt|opt|proc|root|run|sbin|srv|sys|tmp|usr|var)""" +
+      """(?:/[^\s"'`)\]},;:]*)?""").r
+    // (split so that this file does not name the path it checks for)
+    assert(absolute.findAllIn("read(\"/" + "opt/x/y\"); base + \"/t\"; a/tmp")
+      .toList == List("/" + "opt/x/y"))
+    val repo = new java.io.File(".").getCanonicalPath
+    def allowed(p: String): Boolean = p.startsWith("/tmp/graft_") ||
+      Seq(repo, "/root/testdata", "/dev/shm")
+        .exists(r => p == r || p.startsWith(r + "/"))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val offenders =
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .toSeq.sortBy(_.toString).flatMap { f =>
+          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
+            absolute.findAllIn(line).filterNot(allowed)
+              .map(p => s"$f:${i + 1}: $p")
+          }
+        }
+      finally files.close()
+    assert(offenders.isEmpty,
+      "absolute paths outside the repo, /root/testdata, /tmp/graft_* " +
+        "and /dev/shm:\n" + offenders.mkString("\n"))
+  }
 }
