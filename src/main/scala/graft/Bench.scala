@@ -133,25 +133,29 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
         (fullRecord + "\n").getBytes("UTF-8"))
       println("BENCH_FULL_RECORD=BENCH_LOCAL.json")
-      // ALSO a per-round copy (BENCH_LOCAL_r{N}.json, N = 1 + highest
-      // driver-written BENCH_r*.json), so round-over-round per-query
-      // diffs never depend on the driver log's tail truncation
-      val roundRe = "BENCH_r(\\d+)\\.json".r
-      val dir = java.nio.file.Paths.get(".")
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(dir)
-      val round = try {
-        ls.iterator().asScala.flatMap { p =>
-          p.getFileName.toString match {
-            case roundRe(n) => Some(n.toInt)
-            case _ => None
-          }
-        }.maxOption.getOrElse(0) + 1
-      } finally ls.close()
-      val perRound = f"BENCH_LOCAL_r$round%02d.json"
-      java.nio.file.Files.write(java.nio.file.Paths.get(perRound),
-        (fullRecord + "\n").getBytes("UTF-8"))
-      println(s"BENCH_FULL_RECORD_ROUND=$perRound")
+      // ALSO a per-round copy of a full-surface run, under a name no
+      // record has yet (N = 1 + the highest N of any BENCH_r*.json or
+      // BENCH_LOCAL_r*.json), so round-over-round per-query diffs never
+      // depend on a truncated stdout capture and a later run never
+      // replaces a kept record. A SPARK_GRAFT_QUERIES subset is
+      // not a round record.
+      if (only.isEmpty) {
+        val roundRe = "BENCH_(?:LOCAL_)?r(\\d+)\\.json".r
+        import scala.jdk.CollectionConverters._
+        val ls = java.nio.file.Files.list(java.nio.file.Paths.get("."))
+        val round = try {
+          ls.iterator().asScala.flatMap { p =>
+            p.getFileName.toString match {
+              case roundRe(n) => Some(n.toInt)
+              case _ => None
+            }
+          }.maxOption.getOrElse(0) + 1
+        } finally ls.close()
+        val perRound = f"BENCH_LOCAL_r$round%02d.json"
+        java.nio.file.Files.write(java.nio.file.Paths.get(perRound),
+          (fullRecord + "\n").getBytes("UTF-8"))
+        println(s"BENCH_FULL_RECORD_ROUND=$perRound")
+      }
     } catch { case _: Throwable => () } // bench must not fail on an RO cwd
     // Short, final, machine-greppable headline lines — small enough
     // that no tail-capture ever loses them (NOT a second "metric" JSON

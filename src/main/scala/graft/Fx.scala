@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -87,5 +87,43 @@ object Fx {
         case Some("reliable") => df.checkpoint(eager = true)
         case _ => df.localCheckpoint(eager = true)
       }
+  }
+
+  /** Build and [[FxMaterialize.materialized materialize]] independent
+    * intermediates concurrently; the results come back in argument
+    * order, each equal to `build().materialized` run alone.
+    *
+    * Failure and cancel contract: each build's jobs carry a job tag of
+    * their own. The first build to fail, in completion order, cancels
+    * every build's tagged jobs, again until all workers have ended, so
+    * no sibling job outlives the call; then its own exception is
+    * rethrown, unwrapped from the pool's `ExecutionException`.
+    */
+  def materializeAll(builds: (() => DataFrame)*): Seq[DataFrame] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+      Executors, TimeUnit}
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tags = builds.map(_ => s"graft_materialize_${java.util.UUID.randomUUID()}")
+    // A fresh pool per call: its threads start on the caller's thread
+    // and so inherit Spark's local properties (job group, description,
+    // active session), which a long-lived shared pool would not carry.
+    val pool = Executors.newFixedThreadPool(builds.size)
+    val done = new ExecutorCompletionService[DataFrame](pool)
+    val futures = builds.zip(tags).map { case (build, tag) =>
+      done.submit { () =>
+        sc.addJobTag(tag)
+        try build().materialized finally sc.removeJobTag(tag)
+      }
+    }
+    pool.shutdown()
+    try {
+      builds.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: ExecutionException =>
+        do tags.foreach(sc.cancelJobsWithTag)
+        while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+        throw e.getCause
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Fx.FxMaterialize
+import graft.Fx.{FxMaterialize, materializeAll}
 import graft.Tables
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -330,18 +330,8 @@ object Dedup {
     // are themselves independent document scans, so their two
     // materialization jobs run CONCURRENTLY (guide §2.6) instead of
     // back to back; the signature aggregate needs both and follows.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (membersF, shF) =
-      try (
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = exactRepOf(docs).materialized
-        }),
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = shingleSetOf(docs, n).materialized
-        }))
-      finally pool.shutdown()
-    val members = membersF.get()
-    val sh = shF.get()
+    val Seq(members, sh) = materializeAll(
+      () => exactRepOf(docs), () => shingleSetOf(docs, n))
     val repIds = members.filter($"doc_id" === $"rep").select($"doc_id")
     val sigs = minhashSigs(sh.join(repIds, "doc_id"), numHashes).materialized
     val banded = bandKeys(sigs, numHashes, bands)
@@ -515,19 +505,8 @@ object Dedup {
     val sh = shingleSetOf(docs, n).materialized
     // sigs and hot are independent aggregates over the materialized
     // shingles — overlap their materialization jobs (guide §2.6)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (sigsF, hotF) =
-      try (
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame =
-            minhashSigs(sh, numHashes).materialized
-        }),
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = hotSet(sh, maxDf).materialized
-        }))
-      finally pool.shutdown()
-    val sigs = sigsF.get()
-    val hot = hotF.get()
+    val Seq(sigs, hot) = materializeAll(
+      () => minhashSigs(sh, numHashes), () => hotSet(sh, maxDf))
     // banded is a pure explode/projection of the checkpointed sigs —
     // recomputing it per probe is one cheap narrow pass, so an eager
     // materialization job here buys nothing
@@ -557,36 +536,26 @@ object Dedup {
     val shB = shingleSetOf(batch, idx.n).materialized
     // the batch signatures and the hot-set extension are INDEPENDENT
     // aggregates over the checkpointed batch shingles — their two
-    // materialization jobs overlap on a two-thread pool (guide §2.6)
-    // instead of running back to back inside every trigger
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (sigsF, hotF) =
-      try (
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame =
-            minhashSigs(shB, idx.numHashes).materialized
-        }),
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            // only shingles PRESENT in the batch can newly cross the
-            // cap, so the index df lookup scans idx.sh once,
-            // restricted to the batch's shingles; the aggregate's
-            // shuffle is batch-shingle-sized. dfB is a tiny aggregate
-            // over the checkpointed batch shingles — recomputed by its
-            // two consumers rather than paying another eager job
-            val dfB = shB.groupBy($"h").agg(count(lit(1)).as("df_b"))
-            val dfIdx = idx.sh
-              .join(broadcast(dfB.select($"h")), Seq("h"), "left_semi")
-              .groupBy($"h").agg(count(lit(1)).as("df_i"))
-            val newHot = dfB.join(dfIdx, Seq("h"), "left")
-              .filter($"df_b" + coalesce($"df_i", lit(0L)) > idx.maxDf)
-              .select($"h")
-            idx.hot.unionByName(newHot).distinct().materialized
-          }
-        }))
-      finally pool.shutdown()
-    val sigsB = sigsF.get()
-    val hotAll = hotF.get()
+    // materialization jobs overlap (guide §2.6) instead of running
+    // back to back inside every trigger
+    val Seq(sigsB, hotAll) = materializeAll(
+      () => minhashSigs(shB, idx.numHashes),
+      () => {
+        // only shingles PRESENT in the batch can newly cross the
+        // cap, so the index df lookup scans idx.sh once,
+        // restricted to the batch's shingles; the aggregate's
+        // shuffle is batch-shingle-sized. dfB is a tiny aggregate
+        // over the checkpointed batch shingles — recomputed by its
+        // two consumers rather than paying another eager job
+        val dfB = shB.groupBy($"h").agg(count(lit(1)).as("df_b"))
+        val dfIdx = idx.sh
+          .join(broadcast(dfB.select($"h")), Seq("h"), "left_semi")
+          .groupBy($"h").agg(count(lit(1)).as("df_i"))
+        val newHot = dfB.join(dfIdx, Seq("h"), "left")
+          .filter($"df_b" + coalesce($"df_i", lit(0L)) > idx.maxDf)
+          .select($"h")
+        idx.hot.unionByName(newHot).distinct()
+      })
     // lazy projection over checkpointed sigsB (see buildIndex)
     val bandedB = bandKeys(sigsB, idx.numHashes, idx.bands)
     // accumulated relations stay unions of checkpointed parts: each
@@ -727,25 +696,17 @@ object Dedup {
     // at any scale (per-round data is pair-bounded), so the former
     // separate labelSum job was pure added round-trip latency. The
     // observed metric is the exact integer decimal sum — identical to
-    // labelSum's value. obsSum waits on a side thread with a generous
-    // timeout and falls back to the direct aggregate if the metric
-    // somehow never lands (it fires on eager checkpoints — verified —
-    // but convergence must not hinge on a listener delivery).
-    val obsExec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    def obsSum(obs: org.apache.spark.sql.Observation): Option[BigDecimal] = {
-      val f = obsExec.submit(
-        new java.util.concurrent.Callable[java.math.BigDecimal] {
-          override def call(): java.math.BigDecimal =
-            obs.get("s").asInstanceOf[java.math.BigDecimal]
-        })
+    // labelSum's value. obsSum waits with a generous timeout and
+    // falls back to the direct aggregate if the metric somehow never
+    // lands (it fires on eager checkpoints — verified — but
+    // convergence must not hinge on a listener delivery).
+    def obsSum(obs: org.apache.spark.sql.Observation): Option[BigDecimal] =
       try {
-        val s = f.get(30, java.util.concurrent.TimeUnit.SECONDS)
+        import scala.concurrent.duration._
+        val s = scala.concurrent.Await.result(obs.future, 30.seconds)
+          .getAs[java.math.BigDecimal]("s")
         Some(if (s == null) BigDecimal(0) else BigDecimal(s))
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          f.cancel(true); None
-      }
-    }
+      } catch { case _: java.util.concurrent.TimeoutException => None }
     def observed(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
       val obs = org.apache.spark.sql.Observation(
         s"cluster_round_${java.util.UUID.randomUUID()}")
@@ -765,33 +726,31 @@ object Dedup {
     // AQE over all prior rounds' stages.
     var rounds = 0
     var converged = false
-    try {
-      val (init, obs0) = observed(
-        verts.select($"id".as("node"), $"id".as("label")))
-      var labels = init.materialized
-      var prevSum = obsSum(obs0).getOrElse(labelSum(labels))
-      while (!converged && rounds < maxRounds) {
-        val prop = propagateRound(sym, labels)
-        val jumped = prop.as("c").join(labels.as("p"), $"c.label" === $"p.node")
-          .select($"c.node".as("node"), $"p.label".as("label"))
-        val (obsd, obs) = observed(jumped)
-        labels = obsd.materialized
-        rounds += 1
-        val s = obsSum(obs).getOrElse(labelSum(labels))
-        converged = s == prevSum
-        prevSum = s
-      }
-      // the cap is a runaway guard, not a tuning knob: exiting on it
-      // would silently return under-merged labels — the failure mode the
-      // detected fixed point exists to eliminate. Unreachable with
-      // pointer jumping (maxRounds=50 covers diameter ~2^49), so if it
-      // ever fires something is genuinely broken — fail loudly.
-      if (!converged)
-        throw new IllegalStateException(
-          s"label propagation did not converge in $maxRounds rounds")
-      (labels.select($"node".as("doc_id"), $"label".as("cluster_id"))
-        .orderBy($"doc_id"), rounds)
-    } finally obsExec.shutdown()
+    val (init, obs0) = observed(
+      verts.select($"id".as("node"), $"id".as("label")))
+    var labels = init.materialized
+    var prevSum = obsSum(obs0).getOrElse(labelSum(labels))
+    while (!converged && rounds < maxRounds) {
+      val prop = propagateRound(sym, labels)
+      val jumped = prop.as("c").join(labels.as("p"), $"c.label" === $"p.node")
+        .select($"c.node".as("node"), $"p.label".as("label"))
+      val (obsd, obs) = observed(jumped)
+      labels = obsd.materialized
+      rounds += 1
+      val s = obsSum(obs).getOrElse(labelSum(labels))
+      converged = s == prevSum
+      prevSum = s
+    }
+    // the cap is a runaway guard, not a tuning knob: exiting on it
+    // would silently return under-merged labels — the failure mode the
+    // detected fixed point exists to eliminate. Unreachable with
+    // pointer jumping (maxRounds=50 covers diameter ~2^49), so if it
+    // ever fires something is genuinely broken — fail loudly.
+    if (!converged)
+      throw new IllegalStateException(
+        s"label propagation did not converge in $maxRounds rounds")
+    (labels.select($"node".as("doc_id"), $"label".as("cluster_id"))
+      .orderBy($"doc_id"), rounds)
   }
 
   /** Per-near-dup-cluster BEST-QUALITY keeper — the production keeper
@@ -1168,38 +1127,24 @@ object Dedup {
   def dedupMethodAgreement(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ids = Tables.embeddings(spark, dir).select($"vec_id")
-    // the two detectors run FULLY independently — each thread builds
+    // the two detectors run FULLY independently — each build makes
     // AND materializes its pair set (guide §2.6), so the whole
-    // candidate-join + verify cost of both detectors overlaps on two
-    // threads; the agreement aggregate below then folds two tiny
-    // checkpointed pair relations. (Without the checkpoint the two
-    // detector pipelines evaluated inside the final aggregate's one
-    // job, where their stages largely serialized behind the union.)
-    // Results are unchanged.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (lexF, semF) =
-      try {
-        val lf = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame =
-            minhashLshPairsOf(
-                Tables.widened(spark, Tables.documents(spark, dir)))
-              .select($"doc_a", $"doc_b")
-              .join(ids.select($"vec_id".as("doc_a")), Seq("doc_a"), "left_semi")
-              .join(ids.select($"vec_id".as("doc_b")), Seq("doc_b"), "left_semi")
-              .select($"doc_a", $"doc_b")
-              .materialized
-        })
-        val sf = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame =
-            embeddingNearDupLshPairsOf(
-              Tables.widened(spark, Tables.embeddings(spark, dir)))
-              .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b"))
-              .materialized
-        })
-        (lf, sf)
-      } finally pool.shutdown()
-    val lex = lexF.get()
-    val sem = semF.get()
+    // candidate-join + verify cost of both detectors overlaps; the
+    // agreement aggregate below then folds two tiny checkpointed pair
+    // relations. (Without the checkpoint the two detector pipelines
+    // evaluated inside the final aggregate's one job, where their
+    // stages largely serialized behind the union.) Results are
+    // unchanged.
+    val Seq(lex, sem) = materializeAll(
+      () => minhashLshPairsOf(
+          Tables.widened(spark, Tables.documents(spark, dir)))
+        .select($"doc_a", $"doc_b")
+        .join(ids.select($"vec_id".as("doc_a")), Seq("doc_a"), "left_semi")
+        .join(ids.select($"vec_id".as("doc_b")), Seq("doc_b"), "left_semi")
+        .select($"doc_a", $"doc_b"),
+      () => embeddingNearDupLshPairsOf(
+          Tables.widened(spark, Tables.embeddings(spark, dir)))
+        .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
     // ONE action over a tagged union: each detector's (expensive) pair
     // pipeline evaluates exactly once — the former count()/count()/
     // join().count() sequence re-ran MinHash and SRP twice each

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Fx.FxMaterialize
+import graft.Fx.{FxMaterialize, materializeAll}
 import graft.Tables
 import graft.plans.FloatDotProduct.floatDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -811,7 +811,7 @@ object Similarity {
     // deterministic, so overlap changes nothing but the wall clock.
     val emb = Tables.widened(spark, Tables.embeddings(spark, dir))
       .materialized
-    // each thread builds AND materializes its (queries×k)-sized list,
+    // each build makes AND materializes its (queries×k)-sized list,
     // so the five index scans/rankings overlap fully; the report then
     // joins five tiny checkpointed relations
     val methodFns: Seq[(String, () => DataFrame)] = Seq(
@@ -820,14 +820,8 @@ object Similarity {
       "ivf_kmeans" -> (() => ivfKmeansTopKOf(emb, k, nQueries)),
       "pq" -> (() => pqTopKOf(emb, k, nQueries)),
       "srp" -> (() => srpTopKOf(emb, k, nQueries)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(methodFns.size)
-    val built: Seq[(String, DataFrame)] =
-      try methodFns.map { case (m, fn) =>
-        m -> pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = fn().materialized
-        })
-      }.map { case (m, fut) => m -> fut.get() }
-      finally pool.shutdown()
+    val built = methodFns.map(_._1)
+      .zip(materializeAll(methodFns.map(_._2): _*))
     val truth = built.head._2.select($"query_id", $"neighbor_id")
     val methods = built.tail
     val approx = methods.map { case (m, df) =>

@@ -405,10 +405,23 @@ object Streams {
       name
     } finally {
       import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
+      // a state-store maintenance thread can still write a snapshot into
+      // a stopped query's checkpoint, filling a directory after the walk
+      // listed it: walk again until the tree is gone (bounded at 10 s)
+      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+      var pending = true
+      while (pending) pending =
+        try {
+          val walk = java.nio.file.Files.walk(ckpt)
+          try walk.iterator().asScala.toSeq.reverse
+            .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          finally walk.close()
+          false
+        } catch {
+          case _: java.nio.file.DirectoryNotEmptyException
+              if System.nanoTime < deadline =>
+            Thread.sleep(50); true
+        }
     }
   }
 
@@ -653,29 +666,44 @@ object Streams {
     */
   def streamingUpsertQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "stream_upsert")
-    val work = new java.io.File(base, java.util.UUID.randomUUID().toString)
+    val orders = graft.Tables.orders(spark, dir)
+      .select($"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
+    upsertReplay(orders,
+      orders.filter($"okey" % 7 === 0).select($"okey", ($"m" + 1000L).as("m")),
+      "upsertKey" -> "okey")
+  }
+
+  /** The CDC replay the upsert-sink queries share. `base` lands as a
+    * ManifestV2 source commit and streams into the upsert sink (epoch
+    * 0: plain backfill); `updates` lands as a second commit and streams
+    * through the SAME checkpoint (epoch 1), so its keys kill the stale
+    * base versions. [[replay]] does not fit: the second start must
+    * resume from the first one's checkpoint. Reads the sink back per
+    * m-class (`m` >= 1000 marks an updated row, m0 its base class): row
+    * count, key sum and updated-row count.
+    */
+  private def upsertReplay(base: DataFrame, updates: DataFrame,
+      sinkOptions: (String, String)*): DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    val work = new java.io.File(
+      graft.sources.Sources.scratchDir(spark, "stream_upsert"),
+      java.util.UUID.randomUUID().toString)
     val src = new java.io.File(work, "src").toString
     val sink = new java.io.File(work, "sink").toString
     val ck = new java.io.File(work, "ck").toString
-    val orders = graft.Tables.orders(spark, dir)
-      .select($"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
-    def pump(): Unit = {
+    def commitAndPump(commit: DataFrame): Unit = {
+      commit.write.format("graft.sources.ManifestV2")
+        .option("path", src).mode("append").save()
       val q = spark.readStream.format("graft.sources.ManifestV2")
         .option("path", src).load()
         .writeStream.format("graft.sources.ManifestV2")
-        .option("path", sink).option("upsertKey", "okey")
+        .option("path", sink).options(sinkOptions.toMap)
         .option("checkpointLocation", ck).start()
       try q.processAllAvailable() finally q.stop()
     }
-    orders.write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 0: backfill
-    orders.filter($"okey" % 7 === 0)
-      .select($"okey", ($"m" + 1000L).as("m"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 1: updates kill the stale base versions by key
+    commitAndPump(base)
+    commitAndPump(updates)
     spark.read.format("graft.sources.ManifestV2")
       .option("path", sink).load()
       .groupBy(expr("CASE WHEN m >= 1000 THEN m - 1000 ELSE m END").as("m0"))
@@ -713,40 +741,12 @@ object Streams {
     */
   def streamingTombstoneQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "stream_tomb")
-    val work = new java.io.File(base, java.util.UUID.randomUUID().toString)
-    val src = new java.io.File(work, "src").toString
-    val sink = new java.io.File(work, "sink").toString
-    val ck = new java.io.File(work, "ck").toString
     val orders = graft.Tables.orders(spark, dir)
       .select($"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
-    def pump(): Unit = {
-      val q = spark.readStream.format("graft.sources.ManifestV2")
-        .option("path", src).load()
-        .writeStream.format("graft.sources.ManifestV2")
-        .option("path", sink).option("upsertKey", "okey")
-        .option("upsertDeleteCol", "del")
-        .option("checkpointLocation", ck).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    orders.select($"okey", $"m", lit(false).as("del"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 0: backfill (no tombstones)
-    orders.filter($"okey" % 7 === 0 || $"okey" % 5 === 3)
-      .select($"okey", ($"m" + 1000L).as("m"),
-        ($"okey" % 5 === 3).as("del"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 1: updates + tombstones in one CDC batch
-    spark.read.format("graft.sources.ManifestV2")
-      .option("path", sink).load()
-      .groupBy(expr("CASE WHEN m >= 1000 THEN m - 1000 ELSE m END").as("m0"))
-      .agg(count(lit(1)).as("n"),
-        expr("CAST(SUM(okey) AS BIGINT)").as("key_sum"),
-        expr("CAST(SUM(CASE WHEN m >= 1000 THEN 1 ELSE 0 END) AS BIGINT)")
-          .as("updated_n"))
-      .orderBy($"m0")
+    upsertReplay(orders.select($"okey", $"m", lit(false).as("del")),
+      orders.filter($"okey" % 7 === 0 || $"okey" % 5 === 3)
+        .select($"okey", ($"m" + 1000L).as("m"), ($"okey" % 5 === 3).as("del")),
+      "upsertKey" -> "okey", "upsertDeleteCol" -> "del")
   }
 
   /** Driver-contract query for TYPED upsert keys (the r12 follow-on to
@@ -761,38 +761,13 @@ object Streams {
     */
   def streamingUpsertStrQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = graft.sources.Sources.scratchDir(spark, "stream_upsert_str")
-    val work = new java.io.File(base, java.util.UUID.randomUUID().toString)
-    val src = new java.io.File(work, "src").toString
-    val sink = new java.io.File(work, "sink").toString
-    val ck = new java.io.File(work, "ck").toString
     val orders = graft.Tables.orders(spark, dir)
       .select(concat(lit("u"), $"o_orderkey".cast("string")).as("ukey"),
         $"o_orderkey".as("okey"), ($"o_orderkey" % 97).as("m"))
-    def pump(): Unit = {
-      val q = spark.readStream.format("graft.sources.ManifestV2")
-        .option("path", src).load()
-        .writeStream.format("graft.sources.ManifestV2")
-        .option("path", sink).option("upsertKey", "ukey")
-        .option("checkpointLocation", ck).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    orders.write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 0: backfill
-    orders.filter($"okey" % 7 === 0)
-      .select($"ukey", $"okey", ($"m" + 1000L).as("m"))
-      .write.format("graft.sources.ManifestV2")
-      .option("path", src).mode("append").save()
-    pump() // epoch 1: updates kill stale versions by STRING key
-    spark.read.format("graft.sources.ManifestV2")
-      .option("path", sink).load()
-      .groupBy(expr("CASE WHEN m >= 1000 THEN m - 1000 ELSE m END").as("m0"))
-      .agg(count(lit(1)).as("n"),
-        expr("CAST(SUM(okey) AS BIGINT)").as("key_sum"),
-        expr("CAST(SUM(CASE WHEN m >= 1000 THEN 1 ELSE 0 END) AS BIGINT)")
-          .as("updated_n"))
-      .orderBy($"m0")
+    upsertReplay(orders,
+      orders.filter($"okey" % 7 === 0)
+        .select($"ukey", $"okey", ($"m" + 1000L).as("m")),
+      "upsertKey" -> "ukey")
   }
 
   /** [[streamingUpsertStrQuery]] oracle: identical closed form to the

@@ -49,9 +49,18 @@ class StructuralSpec extends AnyFunSuite {
         offenders.mkString("\n"))
   }
 
+  /** Every regular file under `root` with its text, in path order. */
+  private def sources(root: String): Seq[(java.nio.file.Path, String)] = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .toSeq.sortBy(_.toString).map(f =>
+        f -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+    finally files.close()
+  }
+
   test("no source under src/ names an absolute path outside the repo, " +
       "the test data and the scratch roots") {
-    import scala.jdk.CollectionConverters._
     // an absolute path starts at a standard top-level directory; a
     // literal such as "/t" or "/data/snap-1" is a suffix for a base
     // directory chosen at run time, and "a/tmp" is a relative path
@@ -65,19 +74,25 @@ class StructuralSpec extends AnyFunSuite {
     def allowed(p: String): Boolean = p.startsWith("/tmp/graft_") ||
       Seq(repo, "/root/testdata", "/dev/shm")
         .exists(r => p == r || p.startsWith(r + "/"))
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
-    val offenders =
-      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .toSeq.sortBy(_.toString).flatMap { f =>
-          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
-            absolute.findAllIn(line).filterNot(allowed)
-              .map(p => s"$f:${i + 1}: $p")
-          }
-        }
-      finally files.close()
+    val offenders = sources("src").flatMap { case (f, text) =>
+      text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
+        absolute.findAllIn(line).filterNot(allowed)
+          .map(p => s"$f:${i + 1}: $p")
+      }
+    }
     assert(offenders.isEmpty,
       "absolute paths outside the repo, /root/testdata, /tmp/graft_* " +
         "and /dev/shm:\n" + offenders.mkString("\n"))
+  }
+
+  test("Fx.materializeAll is the only thread pool under src/main") {
+    val offenders = sources("src/main").collect {
+      case (f, text) if text.contains("Executors") &&
+          f.getFileName.toString != "Fx.scala" => f.toString
+    }
+    assert(offenders.isEmpty,
+      "java.util.concurrent.Executors outside Fx.scala (run concurrent " +
+        "materializations through Fx.materializeAll):\n" +
+        offenders.mkString("\n"))
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.TemporalState
+import graft.streaming.{Streams, TemporalState}
 import graft.streaming.TemporalState.{AsofIn, Attributed}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,15 +13,9 @@ class TemporalStateSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def runBatches(batches: Seq[Seq[AsofIn]]): Seq[Attributed] = {
-    val in = MemoryStream[AsofIn](spark)
-    val name = s"asof_spec_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = TemporalState.asofEnrich(in.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      spark.table(name).as[Attributed].collect().toSeq.sortBy(_.event_id)
-    } finally q.stop()
+    val name = Streams.replay(spark, "asof_spec", batches, OutputMode.Append)(
+      TemporalState.asofEnrich(_).toDF())
+    spark.table(name).as[Attributed].collect().toSeq.sortBy(_.event_id)
   }
 
   test("in-trigger: event-time order, <= visibility, tie to max id") {
