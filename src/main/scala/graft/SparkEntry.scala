@@ -54,7 +54,8 @@ object SparkEntry {
     "token_count" -> ((s, d) => TextOps.tokenCount(s, d)),
     "token_count_bpe" -> ((s, d) => TextOps.tokenCountBpe(s, d)),
     "doc_fingerprint" -> ((s, d) => TextOps.docFingerprint(s, d)),
-    "pseudo_json_roundtrip" -> ((s, d) => TextOps.pseudoJsonRoundtrip(s, d)),
+    "pseudo_json_roundtrip" -> ((s, d) =>
+      TextOps.pseudoJsonRoundtrip(s, d).orderBy("event_id")),
     "dedup_exact" -> ((s, d) => Dedup.exactDedup(s, d)),
     "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccard(s, d)),
     "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLsh(s, d)),

@@ -42,6 +42,14 @@ object Recommender {
     * tasks than a small session has cores on every iteration stage.
     * The count is not taken from the input's partitioning, because
     * under AQE that plans and runs the input a second time.
+    *
+    * The fit never writes a reliable checkpoint. Whenever the context
+    * has a checkpoint dir (a deployment sets one for
+    * `spark.graft.materialize=reliable`), spark.ml's default interval
+    * checkpoints the iteration-0 item factors: two more jobs and a disk
+    * write per fit, in a directory nothing deletes, so a streaming
+    * refit would leave one behind per batch. Ten iterations need no
+    * lineage cut.
     */
   def train(df: DataFrame, rank: Int = 4, maxIter: Int = 10,
       regParam: Double = 0.1, seed: Long = 5L): ALSModel =
@@ -49,6 +57,7 @@ object Recommender {
       .setUserCol("userId").setItemCol("songId").setRatingCol("rating")
       .setRank(rank).setMaxIter(maxIter).setRegParam(regParam).setSeed(seed)
       .setNumBlocks(df.sparkSession.sparkContext.defaultParallelism)
+      .setCheckpointInterval(-1)
       .setColdStartStrategy("drop")
       .fit(df)
 
@@ -118,9 +127,13 @@ object Recommender {
     * candidates.
     *
     * Besides the per-song counts, the work follows the requested users,
-    * not the history: the rated pairs are cut to those users before
-    * their `distinct`, and the users are counted only when a pass that
-    * ranked less than the whole catalog needs its completeness check.
+    * not the history: the rated pairs are cut to those users (and kept
+    * with their duplicates: a left-anti join only asks whether a match
+    * exists), and the users are counted only when a pass that ranked
+    * less than the whole catalog needs its completeness check.
+    *
+    * A pass that proves complete returns its result still cached; the
+    * caller releases it (`unpersist`) once consumed.
     */
   def recommendTopKUsers(model: ALSModel, ratings: DataFrame,
       users: DataFrame, k: Int = 25, minCnt: Long = 25): DataFrame = {
@@ -130,7 +143,7 @@ object Recommender {
     val eligible = ratings.groupBy($"songId")
       .agg(count(lit(1)).as("cnt")).filter($"cnt" >= minCnt)
     val rated = ratings.select($"userId", $"songId")
-      .join(users.select($"userId"), Seq("userId"), "left_semi").distinct()
+      .join(users.select($"userId"), Seq("userId"), "left_semi")
     val nItems = model.itemFactors.count()
     lazy val nUsers = users.select($"userId").distinct().count()
     val w = Window.partitionBy($"userId")

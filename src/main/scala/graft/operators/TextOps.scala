@@ -965,12 +965,6 @@ object TextOps {
       .orderBy($"bucket")
   }
 
-  /** F3/F4 round-trip: render each event as the reference's pseudo-JSON
-    * wire format (`{'userid': 88888,'music': ('m1', 1038), 'rating': 1}`),
-    * then decode it back with the engine's parser. The oracle computes
-    * the fields directly from the source columns, so any parse defect
-    * shows up as a mismatch.
-    */
   /** The Kafka-shaped wire relation feeding the pseudo-JSON decode:
     * (event_id, value) where value is the reference producer's
     * Python-dict-literal payload (spark_kafka.py:118 — single quotes,
@@ -990,16 +984,27 @@ object TextOps {
         lit("), 'rating': "), floor($"value").cast("int"), lit("}")).as("value"))
   }
 
+  /** F3/F4 round-trip: render each event as the reference's pseudo-JSON
+    * wire format (`{'userid': 88888,'music': ('m1', 1038), 'rating': 1}`),
+    * then decode it back with the engine's parser. The oracle computes
+    * the fields directly from the source columns, so any parse defect
+    * shows up as a mismatch.
+    *
+    * The relation is unordered: a caller that needs `event_id` order
+    * sorts it (the declared `pseudo_json_roundtrip` query, the marker
+    * flush feed). A stream's history needs none, and a sort there
+    * costs a range-sampling job and a range exchange on every batch.
+    */
   def pseudoJsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val wire = pseudoJsonWire(spark, dir)
     val (userid, tag, songid, rating) = PseudoJson.parse($"value")
     wire.select($"event_id", userid.as("userid"), tag.as("tag"),
         songid.as("songid"), rating.as("rating"))
-      // decoded once (eager): the sort's range-sampling pass otherwise
-      // re-runs the whole encode+parse roundtrip a second time
+      // decoded once (eager): every consumer (the declared query's
+      // sort, a stream's history scans, a feed collect) reads the
+      // decoded rows instead of re-running the encode+parse roundtrip
       .materialized
-      .orderBy($"event_id")
   }
 
   /** Gopher/C4-style rule-suite document filter (Rae et al. 2021 §A1.1;

@@ -465,7 +465,7 @@ object Streams {
   def markerFlushQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val evs = graft.operators.TextOps.pseudoJsonRoundtrip(spark, dir)
-      .filter($"event_id" < HarnessFeedCap).collect()
+      .filter($"event_id" < HarnessFeedCap).orderBy($"event_id").collect()
       .map(r => RateEvent(r.getInt(1), r.getString(2), r.getInt(3), r.getInt(4)))
     val name = replay(spark, "marker_flush", slices(evs, 1),
       OutputMode.Append)(in => MarkerBuffer.markerFlush(in).toDF())
@@ -2036,16 +2036,26 @@ object Streams {
       .orderBy($"user_id", $"version")
   }
 
-  /** The per-batch refit of both recommend loops: decode the batch to
-    * (userId, songId, rating), union it with the static history and
-    * cache the union (ST5), and fully refit ALS on it, rank 4 (M5; the
-    * reference has no incremental update). `body` gets (fresh, all,
-    * model); the union is released when it returns or throws, so no
-    * cached history outlives its batch.
+  /** The per-batch refit of both recommend loops: skip an empty batch
+    * (ST4), decode the batch to (userId, songId, rating), union it with
+    * the static history and cache the union (ST5), and fully refit ALS
+    * on it, rank 4 (M5; the reference has no incremental update).
+    * `body` gets (fresh, all, model); the union is released when it
+    * returns or throws, so no cached history outlives its batch.
+    *
+    * The batch is coalesced to `defaultParallelism` first. A
+    * `MemoryStream` plans one input partition per `addData` block, so
+    * a batch of n single-event offers would otherwise add n tasks to
+    * the emptiness check and to every scan of the cached union (the ALS
+    * input, the song counts, the rated pairs, the batch users).
+    * `coalesce` is narrow and never raises the count, and the ALS
+    * blocks already follow `defaultParallelism`.
     */
   private def refit(history: DataFrame, batch: DataFrame)(
       body: (DataFrame, DataFrame, ALSModel) => Unit): Unit = {
-    val fresh = decodeRateEvents(batch)
+    val lines = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
+    if (lines.isEmpty) return
+    val fresh = decodeRateEvents(lines)
       .selectExpr("userid AS userId", "songid AS songId",
         "CAST(rating AS FLOAT) AS rating")
     val all = history.unionByName(fresh).cache()
@@ -2062,7 +2072,8 @@ object Streams {
     * factor blocks number the session's `defaultParallelism`, mllib's
     * `blocks = -1` rule (see [[graft.ml.Recommender.train]]), so the
     * refit's fixed per-batch cost follows the cores, not spark.ml's
-    * 10 × 10 default.
+    * 10 × 10 default. The recommendations `emit` gets are released
+    * when it returns, so no cached result outlives its batch.
     */
   def recommendLoop(events: DataFrame, history: DataFrame,
       checkpoint: String, k: Int = 25, minCnt: Long = 25,
@@ -2073,17 +2084,15 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) { // ST4 empty-batch skip
-          refit(history, batch) { (fresh, all, model) =>
-            // ONE blocked top-k job for every batch user — a factor
-            // matmul with per-block pruning via recommendForUserSubset,
-            // never a users x catalog row cartesian (M6 gates applied as
-            // post-filters with escalation; see recommendTopKUsers)
-            val users = fresh.select("userId").distinct()
-            val recs = graft.ml.Recommender
-              .recommendTopKUsers(model, all, users, k, minCnt)
-            emit(recs, id)
-          }
+        refit(history, batch) { (fresh, all, model) =>
+          // ONE blocked top-k job for every batch user — a factor
+          // matmul with per-block pruning via recommendForUserSubset,
+          // never a users x catalog row cartesian (M6 gates applied as
+          // post-filters with escalation; see recommendTopKUsers)
+          val users = fresh.select("userId").distinct()
+          val recs = graft.ml.Recommender
+            .recommendTopKUsers(model, all, users, k, minCnt)
+          try emit(recs, id) finally recs.unpersist()
         }
       }
 
@@ -2129,30 +2138,28 @@ object Streams {
     replay(spark, "recommend_e2e", slices(streamLines, 1), OutputMode.Append,
         statePartitions = None,
         sink = _.foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { // ST4 empty-batch skip
-          refit(history, batch) { (fresh, all, model) =>
-            val f = graft.ml.Recommender
-              .exportTrainedFactors(model, E2eFactorsPath)
-            // bounded: 1 row (argmax)
-            val topUser = fresh.groupBy($"userId")
-              .agg(count(lit(1)).as("n"))
-              .orderBy($"n".desc, $"userId").limit(1)
-              .collect()(0).getInt(0)
-            val rated = all.filter($"userId" === topUser)
-              .select($"songId").distinct()
-            val cand = all.groupBy($"songId").agg(count(lit(1)).as("cnt"))
-              .filter($"cnt" >= 5)
-              .join(rated, Seq("songId"), "left_anti")
-            val recs = graft.ml.Recommender.predictFromFactors(f,
-                cand.select(lit(topUser).as("userId"), $"songId"))
-              .orderBy($"prediction".desc, $"songId").limit(25)
-              .select($"userId".as("userid"), $"songId".as("songid"),
-                floor($"prediction" * lit(1000000.0)).cast("long")
-                  .as("score_uppm"))
-            out += recs.withColumn("payload",
-                to_json(struct($"userid", $"songid", $"score_uppm")))
-              .materialized
-          }
+        refit(history, batch) { (fresh, all, model) =>
+          val f = graft.ml.Recommender
+            .exportTrainedFactors(model, E2eFactorsPath)
+          // bounded: 1 row (argmax)
+          val topUser = fresh.groupBy($"userId")
+            .agg(count(lit(1)).as("n"))
+            .orderBy($"n".desc, $"userId").limit(1)
+            .collect()(0).getInt(0)
+          val rated = all.filter($"userId" === topUser)
+            .select($"songId").distinct()
+          val cand = all.groupBy($"songId").agg(count(lit(1)).as("cnt"))
+            .filter($"cnt" >= 5)
+            .join(rated, Seq("songId"), "left_anti")
+          val recs = graft.ml.Recommender.predictFromFactors(f,
+              cand.select(lit(topUser).as("userId"), $"songId"))
+            .orderBy($"prediction".desc, $"songId").limit(25)
+            .select($"userId".as("userid"), $"songId".as("songid"),
+              floor($"prediction" * lit(1000000.0)).cast("long")
+                .as("score_uppm"))
+          out += recs.withColumn("payload",
+              to_json(struct($"userid", $"songid", $"score_uppm")))
+            .materialized
         }
       })(_.toDF())
     out.foldLeft(empty)(_ unionByName _).orderBy($"songid")

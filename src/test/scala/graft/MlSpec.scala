@@ -29,6 +29,14 @@ class MlSpec extends AnyFunSuite {
     assert(m.itemFactors.rdd.getNumPartitions == want)
   }
 
+  test("ALS train never checkpoints its factors") {
+    // with a checkpoint dir on the context, spark.ml's default interval
+    // would write the iteration-0 item factors on every fit
+    val m = Recommender.train(Recommender.ratings(spark, sf), maxIter = 1)
+    val als = m.parent.asInstanceOf[org.apache.spark.ml.recommendation.ALS]
+    assert(als.getCheckpointInterval == -1)
+  }
+
   test("ALS recovers a low-rank ratings matrix (RMSE << value scale)") {
     // the corpus's event values are structureless noise, so the model
     // quality check runs on a known rank-2 matrix instead: r(u,i) =

@@ -749,6 +749,88 @@ class StreamingSpec extends AnyFunSuite {
     assert(!emitted.map(_._2).contains(102), "rated song must not be recommended")
   }
 
+  test("recommend loop releases a complete first pass's cached top-K") {
+    import spark.implicits._
+    // 90 songs > max(4k, 64): the first pass ranks 64 songs, proves
+    // complete and returns its result cached
+    val history = (for (u <- 1 to 6; s <- 100 until 190)
+        yield (u, s, ((u * 7 + s) % 5 + 1).toFloat))
+      .toDF("userId", "songId", "rating")
+    val in = MemoryStream[String](spark)
+    val seen = new java.util.concurrent.atomic.AtomicReference[DataFrame]
+    val q = Streams.recommendLoop(in.toDF(), history, tmp(),
+      k = 5, minCnt = 1, trigger = Trigger.AvailableNow()) { (recs, _) =>
+      assert(recs.count() == 5)
+      seen.set(recs)
+    }.start()
+    in.addData("{'userid': 9,'music': ('m1', 102), 'rating': 5}")
+    q.awaitTermination()
+    val recs = seen.get
+    assert(recs != null, "the batch emitted")
+    import org.apache.spark.sql.classic
+    val cached = spark.asInstanceOf[classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(recs.asInstanceOf[classic.Dataset[_]])
+    assert(cached.isEmpty, "the batch's recommendations stayed cached")
+  }
+
+  test("recommend loop: a batch of many addData blocks adds at most " +
+      "defaultParallelism tasks to a stage") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val history = Seq(
+      (1, 100, 4.0f), (1, 101, 5.0f), (2, 100, 3.0f), (2, 102, 4.0f),
+      (3, 101, 2.0f), (3, 102, 5.0f), (4, 100, 4.5f), (4, 101, 1.5f))
+      .toDF("userId", "songId", "rating")
+    val bound = history.rdd.getNumPartitions + sc.defaultParallelism
+    // (job group, stage name, tasks) of every stage submitted
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull, e.stageInfo.name, e.stageInfo.numTasks))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == "stage_width_marker"))
+          drained.countDown()
+    }
+    val in = MemoryStream[String](spark)
+    // one addData block per event: 12 input partitions in one batch
+    val rated = (9 to 20).map(u => u -> (100 + u % 3))
+    rated.foreach { case (u, s) =>
+      in.addData(s"{'userid': $u,'music': ('m1', $s), 'rating': 5}")
+    }
+    val emitted = mutable.ArrayBuffer[(Long, Int, Int)]() // (batch, user, song)
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = Streams.recommendLoop(in.toDF(), history, tmp(),
+        k = 2, minCnt = 1, trigger = Trigger.AvailableNow()) { (recs, id) =>
+        emitted.synchronized {
+          emitted ++= recs.select("userId", "songId").collect()
+            .map(r => (id, r.getInt(0), r.getInt(1)))
+        }
+      }.start()
+      q.awaitTermination()
+      // listener events arrive in order: once a later job's start is
+      // seen, every stage of the stream has been recorded
+      sc.setJobGroup("stage_width_marker", "drain the listener bus")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      q
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val mine = stages.asScala.filter(_._1 == q.runId.toString).toSeq
+    assert(mine.nonEmpty, "the stream's stages carry its run id as job group")
+    val wide = mine.filter(_._3 > bound)
+    assert(wide.isEmpty, s"stages wider than $bound tasks: $wide")
+    assert(emitted.map(_._1).distinct.size == 1, "the 12 events form one batch")
+    assert(emitted.map(_._2).toSet == rated.map(_._1).toSet)
+    assert(emitted.forall { case (_, u, s) => !rated.contains(u -> s) },
+      "a rated song must not be recommended")
+  }
+
   test("streaming incremental IVF equals the batch form row for row") {
     val sf = TestSpark.sf
     val streamed = graft.streaming.Streams.incrementalIvfQuery(spark, sf)
