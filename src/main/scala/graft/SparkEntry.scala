@@ -20,6 +20,25 @@ object SparkEntry {
   private val ratingsSql =
     "SELECT event_id, user_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS song_id, value AS rating FROM events"
 
+  /** A declared query over an operator that returns an unordered
+    * relation: the contract, not the operator, applies the total
+    * `keys` order the oracle states. The relation is materialized
+    * before the sort, so the sort's range sampling reads computed rows
+    * instead of re-running the operator's joins.
+    */
+  private[graft] final class Ordered(val keys: Seq[String],
+      build: (SparkSession, String) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, d: String): DataFrame = {
+      import Fx.FxMaterialize
+      build(s, d).materialized.orderBy(keys.head, keys.tail: _*)
+    }
+  }
+
+  private def ordered(keys: String*)(
+      build: (SparkSession, String) => DataFrame): Ordered =
+    new Ordered(keys, build)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "json_decode_ratings" -> ((s, d) => Relational.jsonDecodeRatings(s, d)),
     "agg_count_avg" -> ((s, d) => Relational.aggCountAvg(s, d)),
@@ -49,20 +68,23 @@ object SparkEntry {
     "corpus_clean" -> ((s, d) => TextOps.cleanCorpus(s, d)),
     "corpus_stats" -> ((s, d) => TextOps.corpusStats(s, d)),
     "corpus_funnel" -> ((s, d) => TextOps.corpusFunnel(s, d)),
-    "decontaminate" -> ((s, d) => Dedup.decontaminate(s, d)),
+    "decontaminate" -> ordered("doc_id")(Dedup.decontaminate(_, _)),
     "quality_score" -> ((s, d) => TextOps.qualityScore(s, d)),
     "token_count" -> ((s, d) => TextOps.tokenCount(s, d)),
     "token_count_bpe" -> ((s, d) => TextOps.tokenCountBpe(s, d)),
     "doc_fingerprint" -> ((s, d) => TextOps.docFingerprint(s, d)),
     "pseudo_json_roundtrip" -> ((s, d) =>
       TextOps.pseudoJsonRoundtrip(s, d).orderBy("event_id")),
-    "dedup_exact" -> ((s, d) => Dedup.exactDedup(s, d)),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccard(s, d)),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLsh(s, d)),
-    "dedup_clusters" -> ((s, d) => Dedup.nearDupClusters(s, d)),
-    "dedup_simhash" -> ((s, d) => Dedup.simhash(s, d)),
-    "embedding_neardup" -> ((s, d) => Dedup.embeddingNearDup(s, d)),
-    "embedding_neardup_lsh" -> ((s, d) => Dedup.embeddingNearDupLsh(s, d)),
+    "dedup_exact" -> ordered("keeper")(Dedup.exactDedup(_, _)),
+    "dedup_ngram_jaccard" ->
+      ordered("doc_a", "doc_b")(Dedup.ngramJaccard(_, _)),
+    "dedup_minhash_lsh" -> ordered("doc_a", "doc_b")(Dedup.minhashLsh(_, _)),
+    "dedup_clusters" -> ordered("doc_id")(Dedup.nearDupClusters(_, _)),
+    "dedup_simhash" -> ordered("doc_a", "doc_b")(Dedup.simhash(_, _)),
+    "embedding_neardup" ->
+      ordered("vec_a", "vec_b")(Dedup.embeddingNearDup(_, _)),
+    "embedding_neardup_lsh" ->
+      ordered("vec_a", "vec_b")(Dedup.embeddingNearDupLsh(_, _)),
     "cosine_topk" -> ((s, d) => Similarity.cosineTopK(s, d)),
     "mmr_rerank" -> ((s, d) => Similarity.mmrRerank(s, d)),
     "ann_ivf_topk" -> ((s, d) => Similarity.ivfTopK(s, d)),
@@ -231,7 +253,8 @@ object SparkEntry {
     "temperature_mixture" -> ((s, d) => TextOps.temperatureMixture(s, d)),
     "stratified_sample" -> ((s, d) => TextOps.stratifiedSample(s, d)),
     "embedding_quantize" -> ((s, d) => Similarity.quantizeInt8(s, d)),
-    "dedup_incremental" -> ((s, d) => Dedup.minhashIncremental(s, d)),
+    "dedup_incremental" ->
+      ordered("doc_a", "doc_b")(Dedup.minhashIncremental(_, _)),
     "streaming_join_attribution" -> ((s, d) =>
       graft.streaming.Streams.streamStreamJoinQuery(s, d)),
     "mixture_rebalance_2d" -> ((s, d) => TextOps.mixtureRebalance2d(s, d)),
@@ -241,8 +264,9 @@ object SparkEntry {
     "bm25_topk" -> ((s, d) => Retrieval.bm25TopK(s, d)),
     "funnel_steps" -> ((s, d) => Relational.funnelSteps(s, d)),
     "shipping_priority" -> ((s, d) => Relational.shippingPriority(s, d)),
-    "decontaminate_bloom" -> ((s, d) => Dedup.decontaminateBloom(s, d)),
-    "dup_span_coverage" -> ((s, d) => Dedup.dupSpanCoverage(s, d)),
+    "decontaminate_bloom" ->
+      ordered("doc_id")(Dedup.decontaminateBloom(_, _)),
+    "dup_span_coverage" -> ordered("doc_id")(Dedup.dupSpanCoverage(_, _)),
     "approx_distinct_hll" -> ((s, d) => Sketches.hllDistinct(s, d)),
     "streaming_hll" -> ((s, d) => graft.streaming.Streams.hllStreamQuery(s, d)),
     "streaming_funnel" -> ((s, d) => graft.streaming.Streams.funnelStreamQuery(s, d)),
@@ -332,7 +356,8 @@ object SparkEntry {
     "median_impute" -> ((s, d) => Relational.medianImpute(s, d)),
     "weighted_sample" -> ((s, d) => TextOps.weightedSample(s, d)),
     "length_bucket_audit" -> ((s, d) => TextOps.lengthBucketAudit(s, d)),
-    "cluster_best_keeper" -> ((s, d) => Dedup.clusterBestKeeper(s, d)),
+    "cluster_best_keeper" ->
+      ordered("cluster_id")(Dedup.clusterBestKeeper(_, _)),
     "zonemap_skip" -> ((s, d) => graft.sources.DataSkipping.zonemapSkip(s, d)),
     "runtime_filter_join" -> ((s, d) => RuntimeFilter.runtimeFilterJoin(s, d)),
     "gopher_quality_filter" -> ((s, d) => TextOps.gopherQualityFilter(s, d)),
@@ -364,7 +389,8 @@ object SparkEntry {
     "user_similarity_topk" -> ((s, d) => Graph.userSimilarityTopK(s, d)),
     "streaming_topk_complete" -> ((s, d) =>
       graft.streaming.Streams.topkCompleteQuery(s, d)),
-    "semantic_dedup_keeper" -> ((s, d) => Dedup.semanticDedupKeeper(s, d)),
+    "semantic_dedup_keeper" ->
+      ordered("cluster_id")(Dedup.semanticDedupKeeper(_, _)),
     "trend_slope" -> ((s, d) => Temporal.trendSlope(s, d)),
     "ohlc_bars" -> ((s, d) => Temporal.ohlcBars(s, d)),
     "streaming_anomaly" -> ((s, d) =>
@@ -374,7 +400,7 @@ object SparkEntry {
       graft.streaming.Streams.fileSourceQuery(s, d)),
     "dedup_method_agreement" -> ((s, d) => Dedup.dedupMethodAgreement(s, d)),
     "topn_other_rollup" -> ((s, d) => Relational.topnOtherRollup(s, d)),
-    "dup_rate_by_source" -> ((s, d) => Dedup.dupRateBySource(s, d)),
+    "dup_rate_by_source" -> ordered("source")(Dedup.dupRateBySource(_, _)),
     "streaming_merge_apply" -> ((s, d) =>
       graft.streaming.Streams.mergeApplyStreamQuery(s, d)),
     "ranking_metrics" -> ((s, d) => RankingEval.rankingMetrics(s, d)),
@@ -400,14 +426,17 @@ object SparkEntry {
       graft.streaming.Streams.twsTtlCountsQuery(s, d)),
     "streaming_tws_stats" -> ((s, d) =>
       graft.streaming.Streams.twsRunningStatsQuery(s, d)),
-    "dedup_containment" -> ((s, d) => Dedup.containmentDedup(s, d)),
+    "dedup_containment" ->
+      ordered("doc_small", "doc_large")(Dedup.containmentDedup(_, _)),
     "histogram_daily_merge" -> ((s, d) => Sketches.histogramDailyMerge(s, d)),
     "min_cost_supplier" -> ((s, d) => Relational.minCostSupplier(s, d)),
     "product_profit" -> ((s, d) => Relational.productProfit(s, d)),
     "important_parts" -> ((s, d) => Relational.importantParts(s, d)),
-    "dedup_prefix_join" -> ((s, d) => Dedup.prefixJaccardJoin(s, d)),
-    "dedup_substring_spans" -> ((s, d) => Dedup.substringSpans(s, d)),
-    "dedup_substring_scrub" -> ((s, d) => Dedup.substringScrub(s, d)),
+    "dedup_prefix_join" ->
+      ordered("doc_a", "doc_b")(Dedup.prefixJaccardJoin(_, _)),
+    "dedup_substring_spans" ->
+      ordered("doc_a", "doc_b")(Dedup.substringSpans(_, _)),
+    "dedup_substring_scrub" -> ordered("doc_id")(Dedup.substringScrub(_, _)),
     "hierarchy_rollup" -> ((s, d) => Graph.hierarchyRollup(s, d)),
     "ab_test_report" -> ((s, d) => Audit.abTestReport(s, d)),
     "video_scene_cuts" -> ((s, d) =>

@@ -11,11 +11,13 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     def selected(name: String) = only.forall(_.contains(name))
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // contain intra-query .cache() blocks (dedup/ALS) so 40 queries
       // in one session don't accumulate memory pressure
@@ -36,6 +38,9 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a failed query leaves only a missing parquet directory behind;
+    // name every one on stdout so the run cannot pass for complete
+    println(s"VERIFY_FAILED=${failed.size} ${failed.sorted.mkString("[", ",", "]")}")
     spark.stop()
   }
 }

@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *    band-key equi-join — candidate generation cost is O(docs·bands),
   *    independent of the pair count, which is what makes near-dup
   *    feasible at 100 TB where all-pairs Jaccard is not.
+  *
+  * Every operator returns an UNORDERED relation: compositions consume
+  * it as is, and a caller that needs an order sorts it (the declared
+  * queries state theirs in [[graft.SparkEntry]]).
   */
 object Dedup {
 
@@ -108,7 +112,6 @@ object Dedup {
     docs
       .groupBy(md5($"text").as("text_hash"))
       .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_copies"))
-      .orderBy($"keeper")
   }
 
   /** N-gram Jaccard near-dup pairs >= minJ via inverted-index join.
@@ -120,26 +123,23 @@ object Dedup {
     ngramJaccardOf(Tables.widened(spark, Tables.documents(spark, dir)),
       n, minJ, maxDf)
 
-  /** [[ngramJaccard]] over an arbitrary (doc_id, text) relation. */
+  /** [[ngramJaccard]] over an arbitrary (doc_id, text) relation:
+    * unordered (doc_a, doc_b, jaccard) pairs with doc_a < doc_b.
+    */
   def ngramJaccardOf(docs: DataFrame, n: Int = 3, minJ: Double = 0.3,
       maxDf: Long = DefaultMaxDf): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // NO materialize before this presentation sort: the work range
-    // sampling re-runs here (merge agg + size joins + filter over the
-    // pair exchange) measured CHEAPER than an extra checkpoint job
-    // (bench A/B: 2.58 → 2.73 with the checkpoint) — unlike
-    // [[prefixJaccardJoinOf]], whose re-sampled verify is heavy
-    ngramJaccardPairsOf(docs, n, minJ, maxDf)
-      .orderBy($"doc_a", $"doc_b")
+    val (common, sizes) = sharedShingles(docs, n, maxDf)
+    jaccardOf(docs.sparkSession, common, sizes)
+      .filter(col("jaccard") >= minJ)
   }
 
-  /** [[ngramJaccardOf]] WITHOUT the final presentation sort — for
-    * consumers that re-aggregate the pair set ([[graft.operators
-    * .TextOps.corpusFunnelOf]]); see [[minhashLshPairsOf]].
+  /** The all-pairs inverted-index core of [[ngramJaccardOf]] and
+    * [[containmentDedupOf]]: (doc_a, doc_b, common) for every pair with
+    * doc_a < doc_b sharing at least one df-capped shingle, plus the
+    * (doc_id, sz) sizes over ALL of each doc's shingles.
     */
-  private[graft] def ngramJaccardPairsOf(docs: DataFrame, n: Int = 3,
-      minJ: Double = 0.3, maxDf: Long = DefaultMaxDf): DataFrame = {
+  private def sharedShingles(docs: DataFrame, n: Int,
+      maxDf: Long): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
     // eager checkpoint, not cache: sizes/capDf/pair-join all read sh
@@ -152,7 +152,7 @@ object Dedup {
         $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
       .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
       .agg(count(lit(1)).as("common"))
-    jaccardOf(spark, common, sizes).filter($"jaccard" >= minJ)
+    (common, sizes)
   }
 
   /** Containment threshold (ppm of the smaller doc's shingles) for
@@ -188,16 +188,7 @@ object Dedup {
       maxDf: Long = DefaultMaxDf): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // eager checkpoint, not cache: sizes/capDf/pair-join all read sh
-    // from independent (concurrent) jobs — a lazy cache lets each
-    // recompute the md5 shingle scan before first materialization
-    val sh = shingleSetOf(docs, n).materialized
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val shc = capDf(sh, maxDf)
-    val common = shc.as("a").join(shc.as("b"),
-        $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(count(lit(1)).as("common"))
+    val (common, sizes) = sharedShingles(docs, n, maxDf)
     common
       .join(sizes.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("sz", "na"), "doc_a")
@@ -218,10 +209,6 @@ object Dedup {
           .as("containment_ppm"),
         least($"containment_a_ppm", $"containment_b_ppm")
           .as("reverse_ppm"))
-      // no materialize before this presentation sort: the re-sampled
-      // work (merge agg + size joins + projection) measured cheaper
-      // than the checkpoint job (bench A/B: 2.73 → 2.93 with it)
-      .orderBy($"doc_small", $"doc_large")
   }
 
   /** (doc_a, doc_b, common) + per-doc sizes -> Jaccard = c/(na+nb-c);
@@ -380,30 +367,10 @@ object Dedup {
     inter.unionByName(intra)
   }
 
-  /** [[minhashLsh]] over an arbitrary (doc_id, text) relation. */
-  def minhashLshOf(docs: DataFrame, n: Int = 3,
-      numHashes: Int = 16, bands: Int = 4,
-      maxDf: Long = DefaultMaxDf): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // materialize the (small, pair-bounded) result BEFORE the
-    // presentation sort: the verify/expand joins sit ABOVE the last
-    // exchange, so the global sort's range-sampling pass would re-run
-    // them end to end (guide §1.4's double-evaluation trap) — the
-    // checkpoint makes sampling+sort read computed rows instead
-    minhashLshPairsOf(docs, n, numHashes, bands, maxDf)
-      .materialized.orderBy($"doc_a", $"doc_b")
-  }
-
-  /** [[minhashLshOf]] WITHOUT the final presentation sort — the form
-    * every downstream COMPOSITION consumes ([[nearDupClusters]], the
-    * agreement report): a consumer that checkpoints or re-aggregates
-    * the pair list gets no value from a total order, but a top-level
-    * Sort below a bare Project is NOT eliminated by Catalyst, so the
-    * sorted form made every such consumer pay a full sort + range
-    * sampling of the pair relation inside its own materialization.
+  /** [[minhashLsh]] over an arbitrary (doc_id, text) relation:
+    * unordered (doc_a, doc_b, jaccard) pairs with doc_a < doc_b.
     */
-  private[graft] def minhashLshPairsOf(docs: DataFrame, n: Int = 3,
+  def minhashLshOf(docs: DataFrame, n: Int = 3,
       numHashes: Int = 16, bands: Int = 4,
       maxDf: Long = DefaultMaxDf): DataFrame = {
     val (members, cand, sh, sigs) = lshCandidates(docs, n, numHashes, bands)
@@ -594,11 +561,11 @@ object Dedup {
       .select(least($"x.doc_id", $"y.doc_id").as("doc_a"),
         greatest($"x.doc_id", $"y.doc_id").as("doc_b"))
       .distinct()
-    verifyCandidates(cand, sh, sigs, maxDf).orderBy($"doc_a", $"doc_b")
+    verifyCandidates(cand, sh, sigs, maxDf)
   }
 
   /** Hard cap on label-propagation rounds — a runaway guard, not a
-    * tuning knob: [[clusterPairsOf]] stops at its DETECTED fixed
+    * tuning knob: [[clustersOf]] stops at its DETECTED fixed
     * point, and with the pointer-jumping step each round roughly
     * doubles the hop distance a label has travelled, so 50 rounds
     * covers components of diameter ~2^49 — i.e. any graph that can
@@ -620,11 +587,8 @@ object Dedup {
     */
   def nearDupClusters(spark: SparkSession, dir: String,
       maxRounds: Int = MaxClusterRounds): DataFrame =
-    // the UNSORTED pair form: clusterPairsOf checkpoints the pair list
-    // immediately, and a presentation sort below that checkpoint is
-    // pure waste (full sort + range sampling of every pair)
-    clusterPairsOf(
-      minhashLshPairsOf(Tables.widened(spark, Tables.documents(spark, dir)))
+    clustersOf(
+      minhashLshOf(Tables.widened(spark, Tables.documents(spark, dir)))
         .select(col("doc_a"), col("doc_b")),
       maxRounds)
 
@@ -660,14 +624,14 @@ object Dedup {
     * 10^9 vertices × 10^10 ids overflow a long, never a 38-digit
     * decimal).
     */
-  def clusterPairsOf(pairs: DataFrame,
+  def clustersOf(pairs: DataFrame,
       maxRounds: Int = MaxClusterRounds): DataFrame =
-    clusterPairsCounted(pairs, maxRounds)._1
+    clustersCounted(pairs, maxRounds)._1
 
-  /** [[clusterPairsOf]] plus the number of propagation rounds actually
+  /** [[clustersOf]] plus the number of propagation rounds actually
     * executed (spec hook for convergence assertions).
     */
-  private[graft] def clusterPairsCounted(pairs: DataFrame,
+  private[graft] def clustersCounted(pairs: DataFrame,
       maxRounds: Int = MaxClusterRounds): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -749,8 +713,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"label propagation did not converge in $maxRounds rounds")
-    (labels.select($"node".as("doc_id"), $"label".as("cluster_id"))
-      .orderBy($"doc_id"), rounds)
+    (labels.select($"node".as("doc_id"), $"label".as("cluster_id")), rounds)
   }
 
   /** Per-near-dup-cluster BEST-QUALITY keeper — the production keeper
@@ -786,7 +749,6 @@ object Dedup {
         max(struct($"quality", (-$"doc_id").as("neg_id"))).as("best"))
       .select($"cluster_id", (-$"best.neg_id").as("keeper"),
         $"best.quality".as("quality"), $"n_members")
-      .orderBy($"cluster_id")
   }
 
   /** Benchmark decontamination — the standard pretraining hygiene
@@ -804,7 +766,6 @@ object Dedup {
     val benchSh = shingleSetOf(benchmark, n).select(col("h")).distinct()
     corpusSh.join(broadcast(benchSh), Seq("h"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
-      .orderBy(col("doc_id"))
   }
 
   /** Driver form: documents with doc_id % benchMod == 0 stand in for
@@ -915,7 +876,6 @@ object Dedup {
     // fraction of the corpus, so both shuffle sides are small)
     survivors.join(benchSh.hint("shuffle_hash"), Seq("h"))
       .groupBy($"doc_id").agg(count(lit(1)).as("n_contaminated"))
-      .orderBy($"doc_id")
   }
 
   /** Driver form of [[decontaminateBloomOf]] — same corpus/benchmark
@@ -980,7 +940,6 @@ object Dedup {
         coalesce($"covered_tokens", lit(0L)).as("covered_tokens"),
         (coalesce($"covered_tokens", lit(0L)).cast("double") / $"n_tokens")
           .as("covered_frac"))
-      .orderBy($"doc_id")
   }
 
   /** (doc_id, token-hash) pairs with multiplicity — the simhash
@@ -1071,14 +1030,13 @@ object Dedup {
       .select($"doc_a", $"doc_b",
         bit_count($"sa".bitwiseXOR($"sb")).as("hamming"))
       .filter($"hamming" <= maxHamming)
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** Semantic dedup keeper — the cross-modal composition that makes
     * the embedding pipeline end in the same production decision as the
     * text pipeline: SRP-banded embedding near-dup pairs
     * ([[embeddingNearDupLshOf]], the scale path) resolve to clusters
-    * via the detected-fixpoint pointer jumping ([[clusterPairsOf]]),
+    * via the detected-fixpoint pointer jumping ([[clustersOf]]),
     * and each cluster keeps its best-quality document via the same
     * struct-max argmax as [[clusterBestKeeperOf]]. The corpus contract
     * declares vectors indexed by the documents' id space (vec_id ≡
@@ -1087,11 +1045,10 @@ object Dedup {
     */
   def semanticDedupKeeper(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // unsorted pair form: clusterPairsOf checkpoints the pairs at once
-    val pairs = embeddingNearDupLshPairsOf(
+    val pairs = embeddingNearDupLshOf(
         Tables.widened(spark, Tables.embeddings(spark, dir)))
       .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b"))
-    clusterBestKeeperOf(clusterPairsOf(pairs),
+    clusterBestKeeperOf(clustersOf(pairs),
       Tables.widened(spark, Tables.documents(spark, dir)))
   }
 
@@ -1111,7 +1068,6 @@ object Dedup {
       .select($"source", $"n_docs", $"n_unique",
         ($"n_docs" - $"n_unique").as("n_dups"),
         expr("(n_docs - n_unique) * 1000000 div n_docs").as("dup_rate_ppm"))
-      .orderBy($"source")
   }
 
   /** Lexical-vs-semantic dedup agreement — the methodology audit a
@@ -1136,13 +1092,13 @@ object Dedup {
     // stages largely serialized behind the union.) Results are
     // unchanged.
     val Seq(lex, sem) = materializeAll(
-      () => minhashLshPairsOf(
+      () => minhashLshOf(
           Tables.widened(spark, Tables.documents(spark, dir)))
         .select($"doc_a", $"doc_b")
         .join(ids.select($"vec_id".as("doc_a")), Seq("doc_a"), "left_semi")
         .join(ids.select($"vec_id".as("doc_b")), Seq("doc_b"), "left_semi")
         .select($"doc_a", $"doc_b"),
-      () => embeddingNearDupLshPairsOf(
+      () => embeddingNearDupLshOf(
           Tables.widened(spark, Tables.embeddings(spark, dir)))
         .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
     // ONE action over a tagged union: each detector's (expensive) pair
@@ -1170,25 +1126,10 @@ object Dedup {
       minCos: Double = 0.4): DataFrame =
     embeddingNearDupOf(Tables.widened(spark, Tables.embeddings(spark, dir)), minCos)
 
-  /** [[embeddingNearDup]] over any (vec_id, embedding ARRAY<FLOAT>). */
-  def embeddingNearDupOf(embeddings: DataFrame,
-      minCos: Double = 0.4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    // materialize before the presentation sort: the all-pairs dot
-    // product is entirely map-side (broadcast theta join — no exchange
-    // below the sort), so range sampling would re-run the whole O(N²)
-    // cosine pass a second time (bench A/B: 1.09 → 0.95 s)
-    embeddingNearDupPairsOf(embeddings, minCos)
-      .materialized
-      .orderBy($"vec_a", $"vec_b")
-  }
-
-  /** [[embeddingNearDupOf]] WITHOUT the final sort/materialization —
-    * the live compute relation (the plan spec audits its codegen
-    * shape here, where the dot-product pipeline is visible).
+  /** [[embeddingNearDup]] over any (vec_id, embedding ARRAY<FLOAT>):
+    * unordered (vec_a, vec_b, cos) pairs with vec_a < vec_b.
     */
-  private[graft] def embeddingNearDupPairsOf(embeddings: DataFrame,
+  def embeddingNearDupOf(embeddings: DataFrame,
       minCos: Double = 0.4): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -1219,25 +1160,10 @@ object Dedup {
       minCos: Double = 0.4): DataFrame =
     embeddingNearDupLshOf(Tables.widened(spark, Tables.embeddings(spark, dir)), minCos)
 
-  /** [[embeddingNearDupLsh]] over any (vec_id, embedding ARRAY<FLOAT>). */
-  def embeddingNearDupLshOf(embeddings: DataFrame,
-      minCos: Double = 0.4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    // materialize before the presentation sort: the cosine verify
-    // (FloatDotProduct over full vectors per candidate) sits above the
-    // candidate distinct's exchange, so range sampling would run it
-    // twice (same rationale as [[minhashLshOf]])
-    embeddingNearDupLshPairsOf(embeddings, minCos)
-      .materialized.orderBy($"vec_a", $"vec_b")
-  }
-
-  /** [[embeddingNearDupLshOf]] WITHOUT the final presentation sort —
-    * what the compositions ([[semanticDedupKeeper]],
-    * [[dedupMethodAgreement]]) consume; see [[minhashLshPairsOf]] for
-    * why the sorted form taxes every checkpointing consumer.
+  /** [[embeddingNearDupLsh]] over any (vec_id, embedding ARRAY<FLOAT>):
+    * unordered (vec_a, vec_b, cos) pairs with vec_a < vec_b.
     */
-  private[graft] def embeddingNearDupLshPairsOf(embeddings: DataFrame,
+  def embeddingNearDupLshOf(embeddings: DataFrame,
       minCos: Double = 0.4): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -1392,13 +1318,6 @@ object Dedup {
       .select($"doc_a", $"doc_b", $"common",
         expr("common * 1000000 div (sza + szb - common)").as("jaccard_ppm"))
       .filter($"jaccard_ppm" >= tauPpm)
-      // materialized before the presentation sort: the exact verify
-      // (docArr joins + array_intersect per candidate) is the plan's
-      // dominant map-side work ABOVE the candidate distinct's
-      // exchange — range sampling re-ran all of it (plan-confirmed:
-      // two BHJs between the sort and the last Exchange)
-      .materialized
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** Minimum reportable shared-run length (tokens) for
@@ -1529,7 +1448,6 @@ object Dedup {
       .select($"da".as("doc_a"), $"db".as("doc_b"),
         $"n_runs", $"longest_run".cast("long").as("longest_run"),
         $"dup_tokens_b".cast("long").as("dup_tokens_b"))
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** Exact-substring SCRUB — the APPLY half of Lee et al. 2022 (the
@@ -1586,7 +1504,6 @@ object Dedup {
         expr("concat_ws(' ', transform(kept, i -> element_at(toks, i)))")
           .as("scrubbed_text"),
         (size($"toks") - size($"kept")).cast("long").as("n_dropped"))
-      .orderBy($"doc_id")
   }
 
   /** Shared CTE chain through the per-diagonal `runs` relation — the

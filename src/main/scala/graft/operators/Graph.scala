@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics beyond connected components
-  * ([[Dedup.clusterPairsOf]]): PageRank over the song co-rating graph
+  * ([[Dedup.clustersOf]]): PageRank over the song co-rating graph
   * — the "related items" centrality a recommender sidecar computes.
   *
   * Determinism: ranks are SCALED INTEGERS (units of 1e-12) and every
@@ -203,7 +203,7 @@ object Graph {
     * per-component sizes — the graph family's components member made
     * first-class on the SONG graph (the dedup pipeline already runs
     * the same algorithm on near-dup pairs). Reuses
-    * [[Dedup.clusterPairsOf]]'s detected-fixpoint min-label
+    * [[Dedup.clustersOf]]'s detected-fixpoint min-label
     * propagation with pointer jumping: O(log diameter) rounds, each a
     * partial-aggregatable (node, min label) shuffle, convergence
     * DETECTED by the monotone label-sum potential (never an unroll
@@ -221,7 +221,7 @@ object Graph {
     import spark.implicits._
     val pairs = edges.filter($"src" < $"dst")
       .select($"src".as("doc_a"), $"dst".as("doc_b"))
-    val comp = Dedup.clusterPairsOf(pairs)
+    val comp = Dedup.clustersOf(pairs)
       .select(col("doc_id").as("song_id"), col("cluster_id").as("component_id"))
     val sizes = comp.groupBy($"component_id")
       .agg(count(lit(1)).as("component_size"))

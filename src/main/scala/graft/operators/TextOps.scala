@@ -143,9 +143,7 @@ object TextOps {
       (TextFns.langGuess($"text") === "en").as("lang_ok"))
     val gop = gopherQualityFilterOf(docs)
       .select($"doc_id", $"keep".as("gopher_ok"))
-    // unsorted pair form — the distinct below re-aggregates anyway,
-    // and the sorted form would force an extra eager materialization
-    val near = graft.operators.Dedup.ngramJaccardPairsOf(docs, 3, 0.5)
+    val near = graft.operators.Dedup.ngramJaccardOf(docs, 3, 0.5)
       .select($"doc_b".as("doc_id")).distinct()
       .withColumn("near_dup", lit(true))
     val contam = graft.operators.Dedup.decontaminateOf(

@@ -224,17 +224,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     // chain 1-2-3 plus island 4-5: labels propagate across hops
     val pairs = Seq((2L, 3L), (1L, 2L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val got = Dedup.clusterPairsOf(pairs).collect()
+    val got = Dedup.clustersOf(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
     // the corpus labels are a genuine fixed point: re-running the loop
     // from the returned labels changes nothing (detection, not unroll)
     val corpus = Dedup.minhashLshOf(Tables.widened(spark, Tables.documents(spark, sf)))
       .select($"doc_a", $"doc_b")
-    val (df, rounds) = Dedup.clusterPairsCounted(corpus)
+    val (df, rounds) = Dedup.clustersCounted(corpus)
     val labels = df.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(rounds < Dedup.MaxClusterRounds, "corpus must converge before the cap")
-    val again = Dedup.clusterPairsOf(corpus).collect()
+    val again = Dedup.clustersOf(corpus).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(labels == again)
   }
@@ -247,7 +247,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // node on label 0, and must do so in more rounds than the old
     // 4-round unroll ever ran (proving the loop really is dynamic).
     val chain = (0L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (df, rounds) = Dedup.clusterPairsCounted(chain)
+    val (df, rounds) = Dedup.clustersCounted(chain)
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 101)
     assert(got.forall(_._2 == 0L), s"under-merged: ${got.filter(_._2 != 0L).take(5).toSeq}")
@@ -258,7 +258,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("cluster resolution: empty pair list yields an empty typed result") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    val out = Dedup.clusterPairsOf(empty)
+    val out = Dedup.clustersOf(empty)
     assert(out.columns.toSeq == Seq("doc_id", "cluster_id"))
     assert(out.count() == 0)
   }
@@ -324,10 +324,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val docs = Tables.widened(spark, Tables.documents(spark, sf))
       .select($"doc_id", $"text")
     val byPredicate = Dedup
-      .minhashIncrementalOf(docs, $"doc_id" % 10 === 0).collect()
+      .minhashIncrementalOf(docs, $"doc_id" % 10 === 0)
+      .orderBy("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val ids = docs.filter($"doc_id" % 10 === 0).select($"doc_id")
-    val byRelation = Dedup.minhashIncrementalIdsOf(docs, ids).collect()
+    val byRelation = Dedup.minhashIncrementalIdsOf(docs, ids)
+      .orderBy("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(byPredicate.nonEmpty, "feed must produce pairs for parity to bite")
     assert(byRelation == byPredicate)
@@ -336,8 +338,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("bloom decontamination equals the broadcast-exact plan, and the " +
       "verify join removes forced false positives") {
     import spark.implicits._
-    val exact = Dedup.decontaminate(spark, sf).collect().toSeq
-    val bloom = Dedup.decontaminateBloom(spark, sf).collect().toSeq
+    val exact = Dedup.decontaminate(spark, sf).orderBy("doc_id").collect().toSeq
+    val bloom = Dedup.decontaminateBloom(spark, sf).orderBy("doc_id").collect().toSeq
     assert(exact.nonEmpty && bloom == exact)
     // 128-bit filter vs hundreds of distinct shingles: nearly every
     // probe is a false positive, so only the exact join keeps this
@@ -345,7 +347,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val d = Tables.documents(spark, sf)
     val tiny = Dedup.decontaminateBloomOf(
       d.filter($"doc_id" % 49 =!= 0), d.filter($"doc_id" % 49 === 0),
-      n = 8, mBits = 128).collect().toSeq
+      n = 8, mBits = 128).orderBy("doc_id").collect().toSeq
     assert(tiny == exact)
   }
 
@@ -365,7 +367,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (1L, "x a b c d e f g h i"),
       (2L, "p q r s t u v w y z")
     ).toDF("doc_id", "text")
-    val got = Dedup.dupSpanCoverageOf(docs, n = 8).collect()
+    val got = Dedup.dupSpanCoverageOf(docs, n = 8).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSeq
     assert(got == Seq(
@@ -447,7 +449,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (99L, "lonely text")).toDF("doc_id", "text")
     val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))
       .toDF("doc_id", "cluster_id")
-    val got = Dedup.clusterBestKeeperOf(clusters, docs).collect()
+    val got = Dedup.clusterBestKeeperOf(clusters, docs)
+      .orderBy("cluster_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     assert(got.toSeq == Seq((1L, 3L, 3L), (10L, 10L, 2L)), got.toSeq.toString)
   }
@@ -527,7 +530,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .distinct().as[Long].collect().toSet
     assert(keepers.forall(k => paired.contains(k._2)))
     // keeper quality is the max over its cluster (re-derived independently)
-    val clusters = graft.operators.Dedup.clusterPairsOf(
+    val clusters = graft.operators.Dedup.clustersOf(
       graft.operators.Dedup.embeddingNearDupLsh(spark, sf)
         .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
     val quality = Tables.documents(spark, sf).select($"doc_id",
@@ -757,7 +760,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (1L, (Seq("b1") ++ s ++ Seq("b2", "b3")).mkString(" ")), // later copy: s scrubbed
       (2L, "c1 c2 c3 c4 c5")) // untouched: passes through verbatim
       .toDF("doc_id", "text")
-    val out = Dedup.substringScrubOf(docs, k).collect()
+    val out = Dedup.substringScrubOf(docs, k).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(out.toSeq == Seq(
       (0L, (Seq("a1", "a2") ++ s ++ Seq("a3")).mkString(" "), 0L),
@@ -773,7 +776,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (0L, s.mkString(" ")),
       (1L, s.mkString(" "))) // identical later copy: everything drops
       .toDF("doc_id", "text")
-    val out = Dedup.substringScrubOf(docs, k).collect()
+    val out = Dedup.substringScrubOf(docs, k).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(out.toSeq == Seq((0L, s.mkString(" "), 0L), (1L, "", 6L)),
       s"got ${out.toSeq}")

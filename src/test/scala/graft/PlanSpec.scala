@@ -91,10 +91,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("float dot product stays inside whole-stage codegen") {
-    // the declared query materializes the pair relation before its
-    // presentation sort (so the returned frame plans as a checkpoint
-    // scan); the codegen property lives on the COMPUTE relation
-    val df = Dedup.embeddingNearDupPairsOf(
+    val df = Dedup.embeddingNearDupOf(
       Tables.widened(spark, Tables.embeddings(spark, sf)))
     val p = executedPlanOf(df)
     assert(p.contains("FloatDotProduct") || p.toLowerCase.contains("float_dot"))
@@ -108,9 +105,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("banded near-dup joins on integer band keys, never cartesian") {
-    // audit the live compute relation — the declared query's returned
-    // frame is a checkpoint scan below its presentation sort
-    val p = plan(Dedup.embeddingNearDupLshPairsOf(
+    val p = plan(Dedup.embeddingNearDupLshOf(
       Tables.widened(spark, Tables.embeddings(spark, sf))))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "candidate generation must be a hash join on (band, key):\n" + p)

@@ -23,7 +23,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = Streams.incrementalMinhashQuery(spark, sf, numBatches = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val oneShot = graft.operators.Dedup.minhashIncremental(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      .orderBy("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(oneShot.nonEmpty, "corpus must contain near-dup pairs to compare")
     assert(streamed == oneShot)
   }

@@ -95,4 +95,54 @@ class StructuralSpec extends AnyFunSuite {
         "materializations through Fx.materializeAll):\n" +
         offenders.mkString("\n"))
   }
+
+  test("Dedup operators apply no presentation sort; only Window specs order") {
+    val sortCall = """\.(?:orderBy|sort)\(""".r
+    val offenders = sources("src/main/scala/graft/operators").collect {
+      case (f, text) if f.getFileName.toString == "Dedup.scala" =>
+        text.linesIterator.zipWithIndex.collect {
+          case (line, i) if sortCall.findFirstIn(line).isDefined &&
+              !line.contains("Window.partitionBy(") => s"$f:${i + 1}: ${line.trim}"
+        }.toSeq
+    }.flatten
+    assert(offenders.isEmpty,
+      "a Dedup operator sorts its output (declare the order in " +
+        "SparkEntry through `ordered`):\n" + offenders.mkString("\n"))
+  }
+
+  /** The keys of a SQL text's trailing ORDER BY at paren depth 0
+    * (outside string literals), table qualifiers dropped; Nil if the
+    * text ends without one.
+    */
+  private def trailingOrderBy(sql: String): Seq[String] = {
+    var depth = 0
+    var quoted = false
+    var last = -1
+    for (i <- sql.indices) sql(i) match {
+      case '\'' => quoted = !quoted
+      case '(' if !quoted => depth += 1
+      case ')' if !quoted => depth -= 1
+      case _ if !quoted && depth == 0 &&
+          sql.regionMatches(true, i, "ORDER BY", 0, 8) => last = i
+      case _ =>
+    }
+    if (last < 0) Nil
+    else sql.substring(last + 8).split(",").toSeq
+      .map(_.trim.split('.').last)
+  }
+
+  test("each ordered entry's keys are its oracle's trailing ORDER BY") {
+    assert(trailingOrderBy("SELECT a, (SELECT 1 ORDER BY z) q FROM t " +
+      "WINDOW w AS (ORDER BY y)\nORDER BY d.a, b") == Seq("a", "b"))
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, o: SparkEntry.Ordered) => name -> o.keys
+    }
+    assert(ordered.size == 18)
+    val mismatched = ordered.collect {
+      case (name, keys) if trailingOrderBy(SparkEntry.oracleSql(name)) != keys =>
+        s"$name: keys ${keys.mkString(", ")}; oracle ORDER BY " +
+          trailingOrderBy(SparkEntry.oracleSql(name)).mkString(", ")
+    }
+    assert(mismatched.isEmpty, mismatched.mkString("\n"))
+  }
 }
